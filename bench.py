@@ -583,7 +583,7 @@ def _polylda_per_iteration(spark, sf_dir: str) -> dict[str, float]:
     from pyspark.sql import functions as F
 
     from mr_lda_spark.operators import parse
-    from mr_lda_spark.plans import polylda as poly_plan
+    from mr_lda_spark.plans import lda
 
     langs = ["en", "es"]
     docs = (
@@ -609,14 +609,13 @@ def _polylda_per_iteration(spark, sf_dir: str) -> dict[str, float]:
             F.col("term_count").cast("int").alias("term_count"),
         )
     )
-    corpus = poly_plan.poly_corpus_from_tall(tall, n_languages=len(langs))
     num_terms = [
         dicts.filter(F.col("lang") == i).count() for i in range(len(langs))
     ]
     iters = 3
     t0 = time.perf_counter()
-    _, state = poly_plan.train_poly(
-        spark, corpus, num_terms, num_topics=4,
+    _, state = lda.train(
+        spark, tall, num_terms, num_topics=4,
         max_iterations=iters, max_gamma_iter=15, converge=0.0, seed=1,
     )
     dt = time.perf_counter() - t0

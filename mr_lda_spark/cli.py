@@ -96,8 +96,6 @@ def cmd_parse(args) -> None:
 
 
 def cmd_train(args) -> None:
-    from pyspark.sql import functions as F
-
     from mr_lda_spark.operators import parse as parse_ops
     from mr_lda_spark.plans import lda
     from mr_lda_spark.sources.corpus import write_table
@@ -142,10 +140,7 @@ def cmd_train(args) -> None:
     ).count()
 
     eta = None
-    log_eta = None
     if args.informed_prior:
-        from mr_lda_spark.operators.informed_prior import eta_from_rows
-
         if _is_sequencefile_path(args.informed_prior):
             # The reference's own informed-prior artifact
             # (SequenceFile<IntWritable, ArrayListOfIntsWritable>,
@@ -155,70 +150,30 @@ def cmd_train(args) -> None:
             eta = read_eta(spark, args.informed_prior)
         else:
             eta = spark.read.parquet(args.informed_prior)
-        log_eta = eta_from_rows(eta, num_terms, args.topic)
 
-    if getattr(args, "beta_mode", "broadcast") == "join":
-        # Distributed-β EM (plans.lda_join) — the scale path when V×K
-        # exceeds executor memory.  β never touches the driver; the
-        # informed prior rides as a distributed η relation.
-        if args.random_start:
-            raise SystemExit(
-                "--beta-mode join supports seeded init only "
-                "(no --random-start); use broadcast mode for that"
-            )
-        from mr_lda_spark.plans import lda_join
-
-        tall = corpus_doc.select(
-            "doc_id",
-            F.explode(F.arrays_zip("term_ids", "term_counts")).alias("z"),
-        ).select(
-            "doc_id",
-            F.col("z.term_ids").alias("term_id"),
-            F.col("z.term_counts").alias("term_count"),
-        )
-        gamma_init = (
-            corpus_doc.select("doc_id", "gamma")
-            if "gamma" in corpus_doc.columns
-            else None  # --model-index resume carries the snapshot
-        )
-        gamma_df, state = lda_join.train_beta_join(
-            spark,
-            tall,
-            num_terms=num_terms,
-            num_topics=args.topic,
-            max_iterations=args.iteration,
-            max_gamma_iter=args.gamma_iteration,
-            alpha_init=alpha_init,
-            seed=args.seed,
-            eta_seeds=eta,
-            gamma_init=gamma_init,
-            symmetric_alpha=args.symmetric_alpha,
-            corpus_checkpoint=args.corpus_checkpoint,
-        )
-        final_corpus = gamma_df
-    else:
-        final_corpus, state = lda.train(
-            spark,
-            corpus_doc,
-            num_terms=num_terms,
-            num_topics=args.topic,
-            max_iterations=args.iteration,
-            max_gamma_iter=args.gamma_iteration,
-            alpha_init=alpha_init,
-            symmetric_alpha=args.symmetric_alpha,
-            log_eta=log_eta,
-            seed=args.seed,
-            random_start_gamma=args.random_start,
-            corpus_checkpoint=args.corpus_checkpoint,
-        )
+    # --beta-mode join keeps β a distributed relation — the scale path
+    # when V×K exceeds executor memory; the informed prior then rides
+    # as a distributed η relation.
+    final_gamma, state = lda.train(
+        spark,
+        corpus_doc,
+        num_terms=num_terms,
+        num_topics=args.topic,
+        max_iterations=args.iteration,
+        max_gamma_iter=args.gamma_iteration,
+        alpha_init=alpha_init,
+        symmetric_alpha=args.symmetric_alpha,
+        eta_seeds=eta,
+        seed=args.seed,
+        random_start_gamma=args.random_start,
+        corpus_checkpoint=args.corpus_checkpoint,
+        beta_mode=getattr(args, "beta_mode", "broadcast"),
+    )
     out = args.output
     write_table(
         lda.beta_dataframe(spark, state), os.path.join(out, f"beta-{len(state.history)}")
     )
-    write_table(
-        final_corpus.select("doc_id", "gamma"),
-        os.path.join(out, f"gamma-{len(state.history)}"),
-    )
+    write_table(final_gamma, os.path.join(out, f"gamma-{len(state.history)}"))
     with open(os.path.join(out, f"alpha-{len(state.history)}.json"), "w") as fh:
         json.dump(
             {
@@ -247,15 +202,14 @@ def cmd_train_poly(args) -> None:
     shared-gamma training.  ``--test <modeldir>`` mirrors the
     reference's own mode switch (polylda/VariationalInference.java:90):
     encode the corpus with the MODEL's dictionaries and run the γ-only
-    held-out pass through the packed-key β join (no driver β
+    held-out pass with β joined as a relation (no driver β
     materialization) instead of training."""
     import glob as globlib
 
-    import numpy as np
     from pyspark.sql import functions as F
 
     from mr_lda_spark.operators import parse
-    from mr_lda_spark.plans import polylda
+    from mr_lda_spark.plans import lda
     from mr_lda_spark.sources.corpus import read_raw_corpus_poly, write_table
 
     spark = _spark("mrlda-train-poly")
@@ -270,63 +224,46 @@ def cmd_train_poly(args) -> None:
         ),
     )
     if getattr(args, "test", None):
-        from mr_lda_spark.plans import polylda_join
-
-        model = args.test
-        dicts = spark.read.parquet(os.path.join(model, "term"))
-        tall = (
-            tokens.groupBy("doc_id", "lang", "term")
-            .agg(F.count(F.lit(1)).alias("term_count"))
-            .join(
-                F.broadcast(dicts.select("lang", "term", "term_id")),
-                ["lang", "term"],
-            )
-            .select(
-                "doc_id", "lang", "term_id",
-                F.col("term_count").cast("int").alias("term_count"),
-            )
+        dicts = spark.read.parquet(os.path.join(args.test, "term"))
+    else:
+        dicts = parse.build_dictionary_per_lang(tokens)
+    tall = (
+        tokens.groupBy("doc_id", "lang", "term")
+        .agg(F.count(F.lit(1)).alias("term_count"))
+        .join(F.broadcast(dicts.select("lang", "term", "term_id")), ["lang", "term"])
+        .select(
+            "doc_id", "lang", "term_id",
+            F.col("term_count").cast("int").alias("term_count"),
         )
+    )
+    sizes = dict(dicts.groupBy("lang").count().collect())
+    num_terms = [sizes.get(i, 0) for i in range(args.language)]
+    if getattr(args, "test", None):
+        model = args.test
+
         # newest snapshot = largest ITERATION suffix, parsed as an int
         # (lexicographic sort puts alpha-9 after alpha-10 — ADVICE r6)
-        def _iter_no(p: str) -> int:
+        def _newest(pattern: str) -> str:
             import re as _re
 
-            m = _re.search(r"-(\d+)(?:\.json)?$", p)
-            return int(m.group(1)) if m else -1
+            def it(p: str) -> int:
+                m = _re.search(r"-(\d+)(?:\.json)?$", p)
+                return int(m.group(1)) if m else -1
 
-        alpha_paths = sorted(
-            globlib.glob(os.path.join(model, "alpha-*.json")), key=_iter_no
-        )
-        with open(alpha_paths[-1]) as fh:
+            return max(globlib.glob(os.path.join(model, pattern)), key=it)
+
+        with open(_newest("alpha-*.json")) as fh:
             alpha = np.asarray(json.load(fh)["alpha"])
-        beta_parts = []
+        beta_tall = None
         for lang in range(args.language):
-            paths = sorted(
-                globlib.glob(os.path.join(model, f"beta-lang{lang}-*")),
-                key=_iter_no,
+            part = spark.read.parquet(_newest(f"beta-lang{lang}-*")).withColumn(
+                "term_id", lda.lang_term_id(F.lit(lang), F.col("term_id"), num_terms)
             )
-            beta_tall = spark.read.parquet(paths[-1])
-            beta_parts.append(
-                beta_tall.groupBy("term_id")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("topic", "log_beta"))
-                    ).alias("p")
-                )
-                .select(
-                    polylda_join.pack_key(
-                        F.lit(lang), F.col("term_id")
-                    ).alias("key"),
-                    F.col("p.log_beta").alias("beta"),
-                )
-            )
-        beta_df = beta_parts[0]
-        for p in beta_parts[1:]:
-            beta_df = beta_df.unionByName(p)
-        out = polylda_join.infer_poly_join(
-            spark, tall, beta_df, alpha,
-            max_gamma_iter=args.gamma_iteration,
+            beta_tall = part if beta_tall is None else beta_tall.unionByName(part)
+        state = lda.LdaState(
+            alpha=alpha, elog_beta=lda.beta_relation(beta_tall), num_terms=num_terms
         )
+        out = lda.infer(spark, tall, state, max_gamma_iter=args.gamma_iteration)
         write_table(out, args.output)
         total = out.agg(
             F.sum("doc_ll").alias("ll"), F.count(F.lit(1)).alias("docs")
@@ -341,23 +278,9 @@ def cmd_train_poly(args) -> None:
             )
         )
         return
-    dicts = parse.build_dictionary_per_lang(tokens)
-    tall = (
-        tokens.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-        .join(F.broadcast(dicts.select("lang", "term", "term_id")), ["lang", "term"])
-        .select(
-            "doc_id", "lang", "term_id",
-            F.col("term_count").cast("int").alias("term_count"),
-        )
-    )
-    corpus = polylda.poly_corpus_from_tall(tall, n_languages=args.language)
-    num_terms = [
-        dicts.filter(F.col("lang") == i).count() for i in range(args.language)
-    ]
-    final_corpus, state = polylda.train_poly(
+    final_gamma, state = lda.train(
         spark,
-        corpus,
+        tall,
         num_terms,
         args.topic,
         max_iterations=args.iteration,
@@ -368,21 +291,10 @@ def cmd_train_poly(args) -> None:
     out = args.output
     write_table(dicts, os.path.join(out, "term"))
     write_table(titles, os.path.join(out, "title"))
-    write_table(
-        final_corpus.select("doc_id", "gamma"),
-        os.path.join(out, f"gamma-{len(state.history)}"),
-    )
-    for lang in range(args.language):
-        eb = state.elog_betas[lang]
-        rows = [
-            (int(k), int(v), float(eb[v, k]))
-            for v in range(1, eb.shape[0])
-            for k in range(args.topic)
-        ]
-        from mr_lda_spark.schemas import BETA
-
+    write_table(final_gamma, os.path.join(out, f"gamma-{len(state.history)}"))
+    for lang, eb in enumerate(state.elog_betas):
         write_table(
-            spark.createDataFrame(rows, schema=BETA),
+            lda.beta_dataframe(spark, lda.LdaState(alpha=state.alpha, elog_beta=eb)),
             os.path.join(out, f"beta-lang{lang}-{len(state.history)}"),
         )
     with open(os.path.join(out, f"alpha-{len(state.history)}.json"), "w") as fh:
@@ -408,25 +320,26 @@ def cmd_infer(args) -> None:
     (beta parquet + alpha json), run a single gamma-only E-step pass
     over a corpus, write gamma + per-doc log-likelihood.
 
-    β goes through the JOIN path (plans.lda_join.infer_join): the
-    stored tall β folds to (term_id, beta[K]) rows and joins the
-    corpus — it never materializes on the driver, so a V×K past
-    executor memory scores the same way a broadcastable one does
-    (below the threshold AQE broadcasts the join on its own)."""
-    import numpy as np
+    β stays a relation (``lda.infer``'s join placement): the stored
+    tall β folds to (term_id, beta[K]) rows and joins the corpus — it
+    never materializes on the driver, so a V×K past executor memory
+    scores the same way a broadcastable one does (below the threshold
+    AQE broadcasts the join on its own)."""
     from pyspark.sql import functions as F
 
-    from mr_lda_spark.plans import lda_join
+    from mr_lda_spark.plans import lda
     from mr_lda_spark.sources.corpus import write_table
 
     spark = _spark("mrlda-infer")
     with open(args.alpha) as fh:
         alpha = np.asarray(json.load(fh)["alpha"])
-    beta_df = lda_join.beta_relation(spark.read.parquet(args.beta))
+    state = lda.LdaState(
+        alpha=alpha, elog_beta=lda.beta_relation(spark.read.parquet(args.beta))
+    )
     corpus_tall = spark.read.parquet(os.path.join(args.input, "document"))
-    out = lda_join.infer_join(
+    out = lda.infer(
         spark, corpus_tall.select("doc_id", "term_id", "term_count"),
-        beta_df, alpha, max_gamma_iter=args.gamma_iteration,
+        state, max_gamma_iter=args.gamma_iteration,
     )
     write_table(out, args.output)
     total = out.agg(
@@ -947,8 +860,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--beta-mode",
         choices=["broadcast", "join"],
         default="broadcast",
-        help="join = distributed-beta EM (plans.lda_join), the scale "
-        "path past broadcastable VxK; supports --informed-prior",
+        help="join = distributed-beta EM (plans.lda beta_mode='join'), "
+        "the scale path past broadcastable VxK; supports --informed-prior",
     )
     pt.add_argument(
         "--model-index",

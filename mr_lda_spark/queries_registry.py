@@ -5981,6 +5981,17 @@ def _lda_trained(spark, sf_dir):
     return state
 
 
+def _join_state(spark, state):
+    """``state`` with β as a relation, so ``lda.infer`` scores through
+    the join placement (β never collected back to the driver)."""
+    from mr_lda_spark.plans import lda as lda_plan
+
+    beta = lda_plan.beta_relation(lda_plan.beta_dataframe(spark, state))
+    return lda_plan.LdaState(
+        alpha=state.alpha, elog_beta=beta, num_terms=state.num_terms
+    )
+
+
 @register("lda_train_topics")
 def lda_train_topics(spark, sf_dir):
     """Native VB-EM training (E-step mapInPandas + relational M-step +
@@ -6045,33 +6056,22 @@ def lda_heldout_perplexity(spark, sf_dir):
 
 @register("lda_heldout_perplexity_join")
 def lda_heldout_perplexity_join(spark, sf_dir):
-    """lda_heldout_perplexity through the β JOIN path
-    (plans.lda_join.infer_join) with auto-broadcast DISABLED — the
+    """lda_heldout_perplexity through the β JOIN placement
+    (plans.lda.infer on a β relation) with auto-broadcast DISABLED — the
     past-the-broadcast-cliff held-out plan (VERDICT r5 item #2).  Same
     audit row as the broadcast query; the pytest parity test pins
     per-doc γ/ll equality, this row pins the aggregate end-to-end.
     Rows-only; hash-checked twin:
     ``lda_heldout_perplexity_join_golden`` (r11)."""
     from mr_lda_spark.plans import lda as lda_plan
-    from mr_lda_spark.plans import lda_join
 
     _, corpus_doc = _lda_setup(spark, sf_dir)
-    state = _lda_trained(spark, sf_dir)
-    tall = corpus_doc.select(
-        "doc_id", F.explode(F.arrays_zip("term_ids", "term_counts")).alias("z")
-    ).select(
-        "doc_id",
-        F.col("z.term_ids").alias("term_id"),
-        F.col("z.term_counts").alias("term_count"),
-    )
-    beta_df = lda_join.beta_relation(lda_plan.beta_dataframe(spark, state))
+    state = _join_state(spark, _lda_trained(spark, sf_dir))
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
-        scored = lda_join.infer_join(
-            spark, tall, beta_df, state.alpha, max_gamma_iter=15
-        )
+        scored = lda_plan.infer(spark, corpus_doc, state, max_gamma_iter=15)
         tokens = corpus_doc.select(
             "doc_id",
             F.aggregate(
@@ -6438,20 +6438,12 @@ def lda_join_mode_topics(spark, sf_dir):
     V*K beyond broadcast): same output shape as lda_train_topics.
     Rows-only."""
     from mr_lda_spark.plans import lda as lda_plan
-    from mr_lda_spark.plans import lda_join
 
     dictionary, corpus_doc = _lda_setup(spark, sf_dir)
     num_terms = dictionary.count()
-    tall = corpus_doc.select(
-        "doc_id", F.explode(F.arrays_zip("term_ids", "term_counts")).alias("z")
-    ).select(
-        "doc_id",
-        F.col("z.term_ids").alias("term_id"),
-        F.col("z.term_counts").alias("term_count"),
-    )
-    _, state = lda_join.train_beta_join(
-        spark, tall, num_terms, LDA_K,
-        max_iterations=2, max_gamma_iter=10, seed=LDA_SEED,
+    _, state = lda_plan.train(
+        spark, corpus_doc, num_terms, LDA_K,
+        max_iterations=2, max_gamma_iter=10, seed=LDA_SEED, beta_mode="join",
     )
     beta = lda_plan.beta_dataframe(spark, state)
     return display.top_terms_per_topic(beta, dictionary, k=5)
@@ -6525,7 +6517,6 @@ def lda_informed_topics(spark, sf_dir):
     the η matrix (seed log 1000 / other log 0.001,
     InformedPrior.java:43-44), which biases the M-step.  Top-5 terms
     per topic; rows-only."""
-    from mr_lda_spark.operators import informed_prior as ip
     from mr_lda_spark.plans import lda as lda_plan
 
     dictionary, corpus_doc = _lda_setup(spark, sf_dir)
@@ -6533,7 +6524,6 @@ def lda_informed_topics(spark, sf_dir):
     eta_rows = dictionary.select(
         ((F.col("term_id") - 1) / 3).cast("int").alias("topic"), "term_id"
     ).filter(F.col("topic") < LDA_K)
-    log_eta = ip.eta_from_rows(eta_rows, num_terms, LDA_K)
     _, state = lda_plan.train(
         spark,
         corpus_doc,
@@ -6542,7 +6532,7 @@ def lda_informed_topics(spark, sf_dir):
         max_iterations=2,
         max_gamma_iter=10,
         seed=LDA_SEED,
-        log_eta=log_eta,
+        eta_seeds=eta_rows,
     )
     beta = lda_plan.beta_dataframe(spark, state)
     return display.top_terms_per_topic(beta, dictionary, k=5)
@@ -6611,7 +6601,7 @@ def _poly_trained(spark, sf_dir):
     """One broadcast polylda train shared by every query consuming the
     (LDA_K, LDA_ITERS, LDA_SEED) polylingual model — same cache move
     as _lda_trained.  Returns (tall, dicts, num_terms, state)."""
-    from mr_lda_spark.plans import polylda as poly_plan
+    from mr_lda_spark.plans import lda as lda_plan
 
     key = ("poly-state", _lda_key(spark, sf_dir))
     if key in _LDA_CACHE:
@@ -6619,9 +6609,8 @@ def _poly_trained(spark, sf_dir):
     tall, dicts, num_terms = _poly_setup(spark, sf_dir)
     tall = tall.persist()
     tall.count()
-    corpus = poly_plan.poly_corpus_from_tall(tall, n_languages=len(num_terms))
-    _, state = poly_plan.train_poly(
-        spark, corpus, num_terms, num_topics=LDA_K,
+    _, state = lda_plan.train(
+        spark, tall, num_terms, num_topics=LDA_K,
         max_iterations=LDA_ITERS, max_gamma_iter=10, seed=LDA_SEED,
     )
     _LDA_CACHE[key] = (tall, dicts, num_terms, state)
@@ -6652,32 +6641,29 @@ def polylda_heldout_perplexity(spark, sf_dir):
     total variational ll, per-token perplexity).  Rows-only
     (stochastic-EM scorer); hash-checked twin:
     ``polylda_heldout_perplexity_golden`` (r11)."""
-    from mr_lda_spark.plans import polylda as poly_plan
+    from mr_lda_spark.plans import lda as lda_plan
 
-    tall, _, num_terms, state = _poly_trained(spark, sf_dir)
-    corpus = poly_plan.poly_corpus_from_tall(tall, n_languages=len(num_terms))
-    scored = poly_plan.infer_poly(spark, corpus, state, max_gamma_iter=15)
+    tall, _, _, state = _poly_trained(spark, sf_dir)
+    scored = lda_plan.infer(spark, tall, state, max_gamma_iter=15)
     return _poly_heldout_row(scored, tall)
 
 
 @register("polylda_heldout_perplexity_join")
 def polylda_heldout_perplexity_join(spark, sf_dir):
-    """polylda_heldout_perplexity through the packed-key β JOIN path
+    """polylda_heldout_perplexity through the β JOIN placement
     with auto-broadcast DISABLED — the past-the-cliff polylingual
     held-out plan; must equal the broadcast audit row (pytest pins
     per-doc parity).  Rows-only; hash-checked twin:
     ``polylda_heldout_perplexity_join_golden`` (r11)."""
-    from mr_lda_spark.plans import polylda_join
+    from mr_lda_spark.plans import lda as lda_plan
 
-    tall, _, num_terms, state = _poly_trained(spark, sf_dir)
-    beta_df = polylda_join.poly_beta_relation(spark, state)
+    tall, _, _, state = _poly_trained(spark, sf_dir)
+    state = _join_state(spark, state)
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
-        scored = polylda_join.infer_poly_join(
-            spark, tall, beta_df, state.alpha, max_gamma_iter=15
-        )
+        scored = lda_plan.infer(spark, tall, state, max_gamma_iter=15)
         return _poly_heldout_row(scored, tall).localCheckpoint()
     finally:
         spark.conf.set(key, prev) if prev is not None else spark.conf.unset(key)
@@ -6686,15 +6672,15 @@ def polylda_heldout_perplexity_join(spark, sf_dir):
 @register("polylda_join_mode_topics")
 def polylda_join_mode_topics(spark, sf_dir):
     """Shuffle-join polylingual E-step (distributed per-language beta
-    keyed (lang << 32) | term_id — the scale path when sum_l V_l x K
+    keyed by the offset term id — the scale path when sum_l V_l x K
     exceeds broadcast): same output shape as polylda_topics.
     Rows-only."""
-    from mr_lda_spark.plans import polylda_join
+    from mr_lda_spark.plans import lda as lda_plan
 
     tall, dicts, num_terms = _poly_setup(spark, sf_dir)
-    _, state = polylda_join.train_poly_join(
+    _, state = lda_plan.train(
         spark, tall, num_terms, num_topics=LDA_K,
-        max_iterations=2, max_gamma_iter=10, seed=LDA_SEED,
+        max_iterations=2, max_gamma_iter=10, seed=LDA_SEED, beta_mode="join",
     )
     return _poly_top_terms(spark, state, dicts)
 
@@ -6965,16 +6951,15 @@ def lda_doc_topics_golden(spark, sf_dir):
 @register("lda_join_train_golden", _golden_oracle("lda_join_train_golden"))
 def lda_join_train_golden(spark, sf_dir):
     """lda_train_golden through the shuffle-join E-step
-    (plans/lda_join.train_beta_join — distributed β, the
+    (plans/lda.train, beta_mode="join" — distributed β, the
     past-the-broadcast-cliff path): same audit shape, its own frozen
     expectations.  Ignores sf_dir."""
     from mr_lda_spark.plans import lda as lda_plan
-    from mr_lda_spark.plans import lda_join
 
     key = ("golden-join-state", spark.sparkContext.applicationId)
     if key not in _LDA_CACHE:
         _, num_terms, tall, _ = _golden_setup(spark)
-        _, state = lda_join.train_beta_join(
+        _, state = lda_plan.train(
             spark,
             tall,
             num_terms,
@@ -6984,6 +6969,7 @@ def lda_join_train_golden(spark, sf_dir):
             seed=GOLDEN_SEED,
             converge=0.0,
             gamma_tol=0.0,
+            beta_mode="join",
         )
         _LDA_CACHE[key] = state
     state = _LDA_CACHE[key]
@@ -6995,18 +6981,15 @@ def lda_join_train_golden(spark, sf_dir):
 def _golden_poly_state(spark):
     """The frozen broadcast-mode polylingual train (shared by the poly
     train golden and the poly held-out goldens)."""
-    from mr_lda_spark.plans import polylda as poly_plan
+    from mr_lda_spark.plans import lda as lda_plan
 
     key = ("golden-poly-state", spark.sparkContext.applicationId)
     if key not in _LDA_CACHE:
         _golden_corpus_check()
         tall, dicts, num_terms = _poly_setup(spark, GOLDEN_SF_DIR)
-        corpus = poly_plan.poly_corpus_from_tall(
-            tall, n_languages=len(num_terms)
-        )
-        _, state = poly_plan.train_poly(
+        _, state = lda_plan.train(
             spark,
-            corpus,
+            tall,
             num_terms,
             num_topics=GOLDEN_K,
             max_iterations=GOLDEN_ITERS,
@@ -7022,7 +7005,8 @@ def _golden_poly_state(spark):
 @register("polylda_train_golden", _golden_oracle("polylda_train_golden"))
 def polylda_train_golden(spark, sf_dir):
     """Hash-checked golden run of polylingual VB-EM
-    (plans/polylda.train_poly — per-language β, shared γ): per-language
+    (plans/lda.train on a polylingual corpus — per-language β, shared
+    γ): per-language
     E[log β] audit slices + the shared α, frozen at GOLDEN_SF_DIR.
     Ignores sf_dir."""
     return _golden_poly_frame(spark, _golden_poly_state(spark))
@@ -7030,7 +7014,7 @@ def polylda_train_golden(spark, sf_dir):
 
 def _golden_poly_frame(spark, state):
     """(kind, lang, topic, term_id, val) audit slice for a
-    PolyLdaState: per-language E[log β] head + the shared α
+    polylingual LdaState: per-language E[log β] head + the shared α
     (lang = -1, term_id 0)."""
     frames = []
     for lang_i, eb in enumerate(state.elog_betas):
@@ -7056,13 +7040,12 @@ def _golden_poly_frame(spark, state):
 @register("lda_informed_golden", _golden_oracle("lda_informed_golden"))
 def lda_informed_golden(spark, sf_dir):
     """Hash-checked golden run of the informed-prior (η) train path
-    (plans/lda.train with log_eta; InformedPrior.java:43-44 smoothing
+    (plans/lda.train with eta_seeds; InformedPrior.java:43-44 smoothing
     — seed words at log 1000, others at log 0.001): the frozen
     configuration plus the deterministic seed rule
     topic = (term_id-1) div 3 for topics < K.  Pins the M-step η
     smoothing and its interaction with the per-topic normalizer.
     Ignores sf_dir."""
-    from mr_lda_spark.operators import informed_prior as ip
     from mr_lda_spark.plans import lda as lda_plan
 
     key = ("golden-informed-state", spark.sparkContext.applicationId)
@@ -7072,7 +7055,6 @@ def lda_informed_golden(spark, sf_dir):
             ((F.col("term_id") - 1) / 3).cast("int").alias("topic"),
             "term_id",
         ).filter(F.col("topic") < GOLDEN_K)
-        log_eta = ip.eta_from_rows(eta_rows, num_terms, GOLDEN_K)
         _, state = lda_plan.train(
             spark,
             corpus_doc,
@@ -7083,7 +7065,7 @@ def lda_informed_golden(spark, sf_dir):
             gamma_tol=0.0,
             converge=0.0,
             seed=GOLDEN_SEED,
-            log_eta=log_eta,
+            eta_seeds=eta_rows,
         )
         _LDA_CACHE[key] = state
     state = _LDA_CACHE[key]
@@ -7196,17 +7178,17 @@ def lda_online_golden(spark, sf_dir):
     _golden_oracle("polylda_join_train_golden"),
 )
 def polylda_join_train_golden(spark, sf_dir):
-    """polylda_train_golden through the packed-key shuffle-join
-    E-step (plans/polylda_join.train_poly_join — distributed
-    per-language β keyed (lang << 32) | term_id): same audit shape,
-    its own frozen expectations.  Ignores sf_dir."""
-    from mr_lda_spark.plans import polylda_join
+    """polylda_train_golden through the shuffle-join E-step
+    (plans/lda.train, beta_mode="join" — distributed per-language β
+    keyed by the offset term id): same audit shape, its own frozen
+    expectations.  Ignores sf_dir."""
+    from mr_lda_spark.plans import lda as lda_plan
 
     key = ("golden-poly-join-state", spark.sparkContext.applicationId)
     if key not in _LDA_CACHE:
         _golden_corpus_check()
         tall, _, num_terms = _poly_setup(spark, GOLDEN_SF_DIR)
-        _, state = polylda_join.train_poly_join(
+        _, state = lda_plan.train(
             spark,
             tall,
             num_terms,
@@ -7216,6 +7198,7 @@ def polylda_join_train_golden(spark, sf_dir):
             seed=GOLDEN_SEED,
             converge=0.0,
             gamma_tol=0.0,
+            beta_mode="join",
         )
         _LDA_CACHE[key] = state
     return _golden_poly_frame(spark, _LDA_CACHE[key])
@@ -7286,28 +7269,22 @@ def lda_heldout_perplexity_golden(spark, sf_dir):
     _golden_oracle("lda_heldout_perplexity_join_golden"),
 )
 def lda_heldout_perplexity_join_golden(spark, sf_dir):
-    """lda_heldout_perplexity_golden through the β JOIN inference path
-    (plans/lda_join.infer_join) with auto-broadcast DISABLED — the
+    """lda_heldout_perplexity_golden through the β JOIN placement
+    (plans/lda.infer on a β relation) with auto-broadcast DISABLED — the
     past-the-broadcast-cliff held-out plan, hash-pinned against its
     own frozen expectation (which the freeze tool proves equal to the
     broadcast row's, so the two E-step geometries are also pinned to
     each other).  Ignores sf_dir."""
     from mr_lda_spark.plans import lda as lda_plan
-    from mr_lda_spark.plans import lda_join
 
     _, _, tall, corpus_doc = _golden_setup(spark)
-    state = _golden_trained(spark)
-    beta_df = lda_join.beta_relation(lda_plan.beta_dataframe(spark, state))
+    state = _join_state(spark, _golden_trained(spark))
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
-        scored = lda_join.infer_join(
-            spark,
-            tall,
-            beta_df,
-            state.alpha,
-            max_gamma_iter=GOLDEN_GAMMA_ITER,
+        scored = lda_plan.infer(
+            spark, tall, state, max_gamma_iter=GOLDEN_GAMMA_ITER
         )
         return _golden_heldout_frame(
             scored, _golden_doc_tokens(corpus_doc)
@@ -7328,16 +7305,15 @@ def _golden_poly_tokens(tall):
 )
 def polylda_heldout_perplexity_golden(spark, sf_dir):
     """Hash-checked golden run of polylingual held-out evaluation
-    (plans/polylda.infer_poly under the frozen per-language β and
-    shared α — the reference polylda -test mode): one audit row.
-    Ignores sf_dir."""
-    from mr_lda_spark.plans import polylda as poly_plan
+    (plans/lda.infer under the frozen per-language β and shared α —
+    the reference polylda -test mode): one audit row.  Ignores
+    sf_dir."""
+    from mr_lda_spark.plans import lda as lda_plan
 
     state = _golden_poly_state(spark)
-    tall, _, num_terms = _poly_setup(spark, GOLDEN_SF_DIR)
-    corpus = poly_plan.poly_corpus_from_tall(tall, n_languages=len(num_terms))
-    scored = poly_plan.infer_poly(
-        spark, corpus, state, max_gamma_iter=GOLDEN_GAMMA_ITER
+    tall, _, _ = _poly_setup(spark, GOLDEN_SF_DIR)
+    scored = lda_plan.infer(
+        spark, tall, state, max_gamma_iter=GOLDEN_GAMMA_ITER
     )
     return _golden_heldout_frame(scored, _golden_poly_tokens(tall))
 
@@ -7347,25 +7323,20 @@ def polylda_heldout_perplexity_golden(spark, sf_dir):
     _golden_oracle("polylda_heldout_perplexity_join_golden"),
 )
 def polylda_heldout_perplexity_join_golden(spark, sf_dir):
-    """polylda_heldout_perplexity_golden through the packed-key β JOIN
-    path (plans/polylda_join.infer_poly_join) with auto-broadcast
-    DISABLED — the past-the-cliff polylingual held-out plan,
-    hash-pinned.  Ignores sf_dir."""
-    from mr_lda_spark.plans import polylda_join
+    """polylda_heldout_perplexity_golden through the β JOIN
+    placement (plans/lda.infer on a β relation keyed by the offset
+    term id) with auto-broadcast DISABLED — the past-the-cliff
+    polylingual held-out plan, hash-pinned.  Ignores sf_dir."""
+    from mr_lda_spark.plans import lda as lda_plan
 
-    state = _golden_poly_state(spark)
-    tall, _, num_terms = _poly_setup(spark, GOLDEN_SF_DIR)
-    beta_df = polylda_join.poly_beta_relation(spark, state)
+    state = _join_state(spark, _golden_poly_state(spark))
+    tall, _, _ = _poly_setup(spark, GOLDEN_SF_DIR)
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
-        scored = polylda_join.infer_poly_join(
-            spark,
-            tall,
-            beta_df,
-            state.alpha,
-            max_gamma_iter=GOLDEN_GAMMA_ITER,
+        scored = lda_plan.infer(
+            spark, tall, state, max_gamma_iter=GOLDEN_GAMMA_ITER
         )
         return _golden_heldout_frame(
             scored, _golden_poly_tokens(tall)

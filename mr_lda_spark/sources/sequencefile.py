@@ -503,9 +503,10 @@ POLY_CORPUS_SCHEMA = T.StructType(
 
 def read_poly_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Read a polylingual Mr.LDA corpus (`SequenceFile<IntWritable,
-    polylda.Document>`) into the engine's polylda doc-form schema
-    (``plans.polylda.train_poly`` input; missing language = empty
-    arrays, matching ``poly_corpus_from_tall``)."""
+    polylda.Document>`) into the per-language slot doc form
+    (doc_id, lang_term_ids, lang_term_counts, gamma; missing language =
+    empty arrays), which ``plans.lda.train`` maps onto offset term ids
+    (``plans.lda.unified_corpus``)."""
 
     def decode(batches):
         for pdf in batches:

@@ -31,9 +31,9 @@ from mr_lda_spark.functions.special import digamma
 from mr_lda_spark.operators import parse
 from mr_lda_spark.plans.lda import (
     DEFAULT_LOG_ETA,
-    _ESTEP_SCHEMA,
-    _estep_kernel,
-
+    _combine_phi,
+    _estep,
+    _pull_stats,
 )
 
 
@@ -89,39 +89,12 @@ def process_micro_batch(
     eb_bc = batch_corpus_doc.sparkSession.sparkContext.broadcast(
         model.elog_beta
     )
-    kernel = _estep_kernel(
-        model.alpha,
-        eb_bc,
-        max_gamma_iter,
-        learning=True,
-        random_start_gamma=False,
-    )
-    if "gamma" not in batch_corpus_doc.columns:
-        batch_corpus_doc = batch_corpus_doc.withColumn(
-            "gamma", F.lit(None).cast("array<double>")
-        )
-    out = batch_corpus_doc.select(
-        "doc_id", "term_ids", "term_counts", "gamma"
-    ).mapInPandas(kernel, schema=_ESTEP_SCHEMA).persist()
-
-    phi = out.filter(F.col("kind") == "phi").select(
-        F.col("doc_id").cast("int").alias("term_id"),
-        F.posexplode("vec").alias("topic", "log_phi"),
-    )
-    from mr_lda_spark.functions.logmath import logsumexp_agg
-
-    rows = logsumexp_agg(phi, ["term_id", "topic"], "log_phi", "lse").collect()
-    n_docs = out.filter(F.col("kind") == "doc").count()
-    ll = out.filter(F.col("kind") == "doc").agg(F.sum("ll")).collect()[0][0]
-    n_tokens = (
-        batch_corpus_doc.select(
-            F.aggregate(
-                F.transform("term_counts", lambda c: c.cast("double")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("n")
-        ).agg(F.sum("n")).collect()[0][0]
-    )
+    out = _estep(
+        batch_corpus_doc, None, model.alpha, eb_bc, max_gamma_iter, True,
+        0.0, None,
+    ).persist()
+    ll, n_docs, n_tokens, _ = _pull_stats(out, K)
+    rows = _combine_phi(out).collect() if n_docs else []
     out.unpersist()
     eb_bc.unpersist()
     if n_docs == 0:

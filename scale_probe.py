@@ -221,8 +221,6 @@ def probe(spark, docs) -> dict[str, float]:
         # that Spark/AQE would otherwise degenerate the probe back to
         # broadcast mode) and time one EM iteration end-to-end against
         # the broadcast path above at the same tier.
-        from mr_lda_spark.plans import lda_join
-
         tokens = parse.tokenize(docs)
         dictionary = parse.build_dictionary(
             parse.term_stats(tokens), docs.count()
@@ -232,7 +230,7 @@ def probe(spark, docs) -> dict[str, float]:
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "-1")
         try:
-            lda_join.train_beta_join(
+            lda.train(
                 spark,
                 tall,
                 num_terms=dictionary.count(),
@@ -241,6 +239,7 @@ def probe(spark, docs) -> dict[str, float]:
                 max_gamma_iter=25,
                 converge=0.0,
                 seed=1,
+                beta_mode="join",
             )
         finally:
             if prev is None:
@@ -289,12 +288,9 @@ def probe(spark, docs) -> dict[str, float]:
         return tall, num_terms
 
     def polylda_one_iter():
-        from mr_lda_spark.plans import polylda
-
         tall, num_terms = _poly_prep()
-        corpus = polylda.poly_corpus_from_tall(tall, n_languages=2)
-        polylda.train_poly(
-            spark, corpus, num_terms, num_topics=4,
+        lda.train(
+            spark, tall, num_terms, num_topics=4,
             max_iterations=1, max_gamma_iter=25, converge=0.0, seed=1,
         )
 
@@ -303,16 +299,15 @@ def probe(spark, docs) -> dict[str, float]:
     def polylda_join_one_iter():
         # Distributed per-language β (VERDICT r5 next #1): force the β
         # join to stay a SHUFFLE join, same protocol as the mono tier.
-        from mr_lda_spark.plans import polylda_join
-
         tall, num_terms = _poly_prep()
         key = "spark.sql.autoBroadcastJoinThreshold"
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "-1")
         try:
-            polylda_join.train_poly_join(
+            lda.train(
                 spark, tall, num_terms, num_topics=4,
                 max_iterations=1, max_gamma_iter=25, converge=0.0, seed=1,
+                beta_mode="join",
             )
         finally:
             if prev is None:
@@ -329,7 +324,9 @@ def probe(spark, docs) -> dict[str, float]:
     # inference pass end-to-end, including the β-relation build for
     # the join path.  Done-bar: each held-out tier ≤ its one-training-
     # iteration sibling at the same tier.
-    from mr_lda_spark.plans import lda_join, polylda, polylda_join
+    def as_relation(state):
+        beta = lda.beta_relation(lda.beta_dataframe(spark, state))
+        return lda.LdaState(state.alpha, beta, num_terms=state.num_terms)
 
     tokens = parse.tokenize(docs)
     dictionary = parse.build_dictionary(
@@ -350,13 +347,13 @@ def probe(spark, docs) -> dict[str, float]:
     )
 
     def infer_join_forced():
-        beta_df = lda_join.beta_relation(lda.beta_dataframe(spark, state))
+        join_state = as_relation(state)
         key = "spark.sql.autoBroadcastJoinThreshold"
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "-1")
         try:
-            lda_join.infer_join(
-                spark, tall, beta_df, state.alpha, max_gamma_iter=25
+            lda.infer(
+                spark, tall, join_state, max_gamma_iter=25
             ).agg(F.sum("doc_ll")).collect()
         finally:
             if prev is None:
@@ -371,26 +368,25 @@ def probe(spark, docs) -> dict[str, float]:
     tall_p, num_terms_p = _poly_prep()
     tall_p = tall_p.persist()
     tall_p.count()
-    corpus_p = polylda.poly_corpus_from_tall(tall_p, n_languages=2)
-    _, pstate = polylda.train_poly(
-        spark, corpus_p, num_terms_p, num_topics=4,
+    _, pstate = lda.train(
+        spark, tall_p, num_terms_p, num_topics=4,
         max_iterations=1, max_gamma_iter=25, converge=0.0, seed=1,
     )
     t(
         "polylda_infer_heldout_k4",
-        lambda: polylda.infer_poly(spark, corpus_p, pstate, max_gamma_iter=25)
+        lambda: lda.infer(spark, tall_p, pstate, max_gamma_iter=25)
         .agg(F.sum("doc_ll"))
         .collect(),
     )
 
     def poly_infer_join_forced():
-        beta_df = polylda_join.poly_beta_relation(spark, pstate)
+        join_state = as_relation(pstate)
         key = "spark.sql.autoBroadcastJoinThreshold"
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "-1")
         try:
-            polylda_join.infer_poly_join(
-                spark, tall_p, beta_df, pstate.alpha, max_gamma_iter=25
+            lda.infer(
+                spark, tall_p, join_state, max_gamma_iter=25
             ).agg(F.sum("doc_ll")).collect()
         finally:
             if prev is None:

@@ -5,10 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_lda_spark.operators import parse
-from mr_lda_spark.operators.informed_prior import (
-    eta_from_rows,
-    parse_informed_prior,
-)
+from mr_lda_spark.operators.informed_prior import parse_informed_prior
 from mr_lda_spark.plans import lda
 
 
@@ -45,7 +42,6 @@ def test_informed_prior_steers_topics(spark, documents):
     eta_rows = spark.createDataFrame(
         [(0, terms[w]) for w in seed_words], schema="topic int, term_id int"
     )
-    log_eta = eta_from_rows(eta_rows, num_terms, K)
     _, state = lda.train(
         spark,
         corpus_doc,
@@ -53,7 +49,7 @@ def test_informed_prior_steers_topics(spark, documents):
         K,
         max_iterations=3,
         max_gamma_iter=10,
-        log_eta=log_eta,
+        eta_seeds=eta_rows,
         seed=5,
     )
     # Seeded words' beta mass must concentrate in topic 0.

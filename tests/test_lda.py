@@ -3,6 +3,7 @@ the stochastic core is checked by invariants, not value hashes).
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -145,9 +146,10 @@ def test_resume_from_gamma(spark, encoded):
     """Resume (-modelindex analogue): carrying γ forward yields a
     higher-or-equal first-iteration ELBO than a cold start."""
     corpus_doc, num_terms = encoded
-    warm_corpus, s1 = lda.train(
+    gamma, s1 = lda.train(
         spark, corpus_doc, num_terms, K, max_iterations=2, max_gamma_iter=10, seed=3
     )
+    warm_corpus = corpus_doc.drop("gamma").join(gamma, "doc_id", "left")
     _, s2 = lda.train(
         spark, warm_corpus, num_terms, K, max_iterations=1, max_gamma_iter=10, seed=3
     )
@@ -171,11 +173,24 @@ def test_display_document_flat(spark, encoded, trained):
     assert all(abs(r["s"] - 1.0) < 1e-9 for r in agg)
 
 
+def _mode_corpus(encoded, poly_tall, langs):
+    """(corpus, num_terms) for a mono or an L=2 run."""
+    return encoded if langs == "mono" else poly_tall
+
+
+MODES = [
+    pytest.param(b, l, id=f"{b}-{l}")
+    for b in ("broadcast", "join") for l in ("mono", "L2")
+]
+
+
 @pytest.mark.slow
-def test_estep_backend_hook(spark, encoded):
-    """The pluggable sweep backend (accelerator hook): a delegating
-    backend is bit-identical to the default; a truncated backend
-    diverges — i.e. the injected kernel really runs on executors.
+@pytest.mark.parametrize("beta_mode,langs", MODES)
+def test_estep_backend_hook(spark, encoded, poly_tall, beta_mode, langs):
+    """The pluggable sweep backend (accelerator hook) reaches every
+    mode: a delegating backend matches the default; a truncated
+    backend diverges — i.e. the injected kernel really runs on
+    executors.
 
     The backends are nested closures so cloudpickle ships them by
     VALUE (a user's custom kernel won't be importable on executors
@@ -193,15 +208,11 @@ def test_estep_backend_hook(spark, encoded):
         # trajectory proves the hook is in the executor hot path.
         return numpy_sweep_backend(elb, counts_pad, gamma, alpha, 1, 0.0)
 
-    corpus_doc, num_terms = encoded
-    _, base = lda.train(
-        spark, corpus_doc, num_terms, K,
-        max_iterations=2, max_gamma_iter=10, seed=11,
-    )
+    corpus, num_terms = _mode_corpus(encoded, poly_tall, langs)
+    kw = dict(max_iterations=2, max_gamma_iter=10, seed=11, beta_mode=beta_mode)
+    _, base = lda.train(spark, corpus, num_terms, K, **kw)
     _, same = lda.train(
-        spark, corpus_doc, num_terms, K,
-        max_iterations=2, max_gamma_iter=10, seed=11,
-        estep_backend=_tracing_backend,
+        spark, corpus, num_terms, K, estep_backend=_tracing_backend, **kw
     )
     # Tight allclose, not bitwise: the φ logsumexp combiner sums
     # partition partials in shuffle arrival order, so two runs of the
@@ -210,8 +221,85 @@ def test_estep_backend_hook(spark, encoded):
     np.testing.assert_allclose(base.alpha, same.alpha, rtol=1e-12)
 
     _, diff = lda.train(
-        spark, corpus_doc, num_terms, K,
-        max_iterations=2, max_gamma_iter=10, seed=11,
-        estep_backend=_one_sweep_backend,
+        spark, corpus, num_terms, K, estep_backend=_one_sweep_backend, **kw
     )
     assert not np.allclose(base.elog_beta, diff.elog_beta, rtol=1e-6)
+
+
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+def test_empty_documents_leave_alpha_unchanged(spark, beta_mode):
+    """Empty documents (e.g. from a reference SequenceFile corpus) are
+    dropped by the E-step (P7), so they must not count towards D in the
+    α update either: adding them leaves α and the ELBO history as they
+    were, in both β placements."""
+    rows = [
+        (d, [1 + d % 6, 1 + (d + 2) % 6], [1 + d % 3, 2]) for d in range(24)
+    ]
+    schema = "doc_id long, term_ids array<int>, term_counts array<int>"
+    corpus = spark.createDataFrame(rows, schema)
+    padded = spark.createDataFrame(
+        rows + [(100 + d, [], []) for d in range(8)], schema
+    )
+    kw = dict(
+        max_iterations=2, max_gamma_iter=8, seed=5, converge=0.0,
+        beta_mode=beta_mode,
+    )
+    _, ref = lda.train(spark, corpus, 6, 3, **kw)
+    _, got = lda.train(spark, padded, 6, 3, **kw)
+    np.testing.assert_allclose(got.alpha, ref.alpha, rtol=1e-10)
+    np.testing.assert_allclose(got.history, ref.history, rtol=1e-10)
+    assert got.total_tokens == ref.total_tokens
+
+
+def _kernel_batches(elog_beta, carry_beta):
+    """Two pandas batches of a tiny seeded corpus (one doc empty), in
+    the broadcast (gather) or the join (row-carried β slices) layout."""
+    rng = np.random.default_rng(3)
+    docs = []
+    for d in range(9):
+        n = int(rng.integers(1, 6)) if d != 4 else 0
+        terms = np.sort(rng.choice(np.arange(1, 13), size=n, replace=False))
+        docs.append((d, terms.astype(np.int32), rng.integers(1, 4, size=n)))
+    batches = []
+    for chunk in (docs[:5], docs[5:]):
+        pdf = pd.DataFrame(
+            {
+                "doc_id": [d for d, _, _ in chunk],
+                "term_ids": [t for _, t, _ in chunk],
+                "term_counts": [c for _, _, c in chunk],
+                "gamma": [None] * len(chunk),
+            }
+        )
+        if carry_beta:
+            pdf["betas"] = [list(elog_beta[t]) for _, t, _ in chunk]
+        batches.append(pdf)
+    return batches
+
+
+def test_kernel_gather_equals_row_carried_beta():
+    """The one E-step kernel, called without Spark: a broadcast-gather
+    input and a row-carried-β input give identical γ, per-doc ll and
+    α/ELBO stats rows, and the same merged φ partials (dense vs
+    size-bounded accumulator)."""
+    elog_beta = lda.init_elog_beta(12, K, seed=1)
+    alpha = np.full(K, 0.3)
+    outs = []
+    for carry in (False, True):
+        run = lda._estep_kernel(
+            alpha, 10, learning=True, elog_beta=None if carry else elog_beta
+        )
+        frames = run(_kernel_batches(elog_beta, carry))
+        outs.append(pd.DataFrame([r for f in frames for r in f.itertuples(index=False)]))
+    gather, carried = outs
+    for kind in ("doc", "stats"):
+        a, b = gather[gather.kind == kind], carried[carried.kind == kind]
+        assert list(a["id"]) == list(b["id"])
+        np.testing.assert_array_equal(np.stack(a["vec"]), np.stack(b["vec"]))
+        np.testing.assert_array_equal(a["ll"].astype(float), b["ll"].astype(float))
+    docs = gather[gather.kind == "doc"]
+    assert 4 not in set(docs["id"]) and len(docs) == 8  # P7: empty doc dropped
+    phi_a = {i: v for i, v in zip(*gather[gather.kind == "phi"][["id", "vec"]].T.values)}
+    phi_b = {i: v for i, v in zip(*carried[carried.kind == "phi"][["id", "vec"]].T.values)}
+    assert phi_a.keys() == phi_b.keys()
+    for t in phi_a:
+        np.testing.assert_allclose(phi_a[t], phi_b[t], rtol=1e-13)

@@ -1,10 +1,10 @@
-"""Join-mode (distributed β) EM must agree with broadcast mode."""
+"""Join placement (distributed β) EM must agree with broadcast mode."""
 
 import numpy as np
 import pytest
 
 from mr_lda_spark.operators import parse
-from mr_lda_spark.plans import lda, lda_join
+from mr_lda_spark.plans import lda
 
 K = 3
 ITERS = 3
@@ -27,8 +27,8 @@ def test_join_mode_matches_broadcast_mode(spark, encoded):
         spark, corpus_doc, num_terms, K,
         max_iterations=ITERS, max_gamma_iter=10, seed=21, converge=0.0,
     )
-    gamma_df, s_join = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    gamma_df, s_join = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=ITERS, max_gamma_iter=10, seed=21, converge=0.0,
         shuffle_partitions=8,
     )
@@ -47,8 +47,8 @@ def test_join_mode_matches_broadcast_mode(spark, encoded):
 @pytest.mark.slow
 def test_join_mode_elbo_monotone(spark, encoded):
     tall, num_terms = encoded
-    _, state = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    _, state = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=ITERS, max_gamma_iter=10, seed=5, converge=0.0,
         shuffle_partitions=8,
     )
@@ -72,15 +72,18 @@ def test_infer_join_matches_broadcast_infer(spark, encoded):
         r["doc_id"]: (r["gamma"], r["doc_ll"])
         for r in lda.infer(spark, corpus_doc, state, max_gamma_iter=12).collect()
     }
-    beta_df = lda_join.beta_relation(lda.beta_dataframe(spark, state))
+    join_state = lda.LdaState(
+        alpha=state.alpha,
+        elog_beta=lda.beta_relation(lda.beta_dataframe(spark, state)),
+    )
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
         jn = {
             r["doc_id"]: (r["gamma"], r["doc_ll"])
-            for r in lda_join.infer_join(
-                spark, tall, beta_df, state.alpha, max_gamma_iter=12
+            for r in lda.infer(
+                spark, tall, join_state, max_gamma_iter=12
             ).collect()
         }
     finally:
@@ -97,23 +100,19 @@ def test_join_mode_informed_prior_matches_broadcast(spark, encoded):
     η relation must reproduce broadcast mode's dense η matrix exactly
     (non-seed terms carry 0.001 mass in the normalizer — a sparse λ
     relation would get every β row wrong)."""
-    from mr_lda_spark.operators.informed_prior import eta_from_rows
-
     tall, num_terms = encoded
     corpus_doc = parse.corpus_to_doc_form(tall)
     # seeds: two topics pinned on a few low term ids
     seeds = spark.createDataFrame(
         [(0, 1), (0, 2), (1, 3), (1, 4), (2, 5)], "topic int, term_id int"
     )
-    log_eta = eta_from_rows(seeds, num_terms, K)
-
     _, s_bc = lda.train(
         spark, corpus_doc, num_terms, K,
         max_iterations=2, max_gamma_iter=8, seed=7, converge=0.0,
-        log_eta=log_eta,
+        eta_seeds=seeds,
     )
-    _, s_join = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    _, s_join = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=2, max_gamma_iter=8, seed=7, converge=0.0,
         shuffle_partitions=8, eta_seeds=seeds,
     )
@@ -132,13 +131,13 @@ def test_join_mode_gamma_tol_converges(spark, encoded):
     yields a monotone ELBO and a result near the exact-sweep run (the
     gate only skips sweeps that were no longer moving gamma)."""
     tall, num_terms = encoded
-    _, exact = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    _, exact = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=2, max_gamma_iter=20, seed=3, converge=0.0,
         shuffle_partitions=8,
     )
-    _, gated = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    _, gated = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=2, max_gamma_iter=20, seed=3, converge=0.0,
         shuffle_partitions=8, gamma_tol=1e-4,
     )
@@ -170,11 +169,12 @@ def test_join_mode_resume_matches_broadcast_resume(spark, encoded):
         max_iterations=2, max_gamma_iter=8, seed=11, converge=0.0,
         alpha_init=s1.alpha,
     )
-    # Phase 2b: resume join mode (gamma_init snapshot).
-    _, s_join = lda_join.train_beta_join(
-        spark, tall, num_terms, K,
+    # Phase 2b: resume join mode (the same gamma column).
+    _, s_join = lda.train(
+        spark, corpus_doc.drop("gamma").join(snap, "doc_id", "left"),
+        num_terms, K, beta_mode="join",
         max_iterations=2, max_gamma_iter=8, seed=11, converge=0.0,
-        shuffle_partitions=8, alpha_init=s1.alpha, gamma_init=snap,
+        shuffle_partitions=8, alpha_init=s1.alpha,
     )
     np.testing.assert_allclose(
         np.array(s_join.history), np.array(s_bc.history), rtol=1e-8

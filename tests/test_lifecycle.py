@@ -242,7 +242,7 @@ def test_corpus_checkpoint_reliable_join_mode(spark, tmp_path):
     divergence a wrong checkpoint cut would cause)."""
     import numpy as np
 
-    from mr_lda_spark.plans import lda_join
+    from mr_lda_spark.plans import lda
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt2"))
     rows = [
@@ -255,12 +255,12 @@ def test_corpus_checkpoint_reliable_join_mode(spark, tmp_path):
     )
     kw = dict(
         num_terms=5, num_topics=3, max_iterations=2,
-        max_gamma_iter=10, converge=0.0, seed=7,
+        max_gamma_iter=10, converge=0.0, seed=7, beta_mode="join",
     )
-    g_local, s_local = lda_join.train_beta_join(
+    g_local, s_local = lda.train(
         spark, tall, corpus_checkpoint="local", **kw
     )
-    g_rel, s_rel = lda_join.train_beta_join(
+    g_rel, s_rel = lda.train(
         spark, tall, corpus_checkpoint="reliable", **kw
     )
     assert np.allclose(s_local.elog_beta, s_rel.elog_beta, rtol=1e-9)
@@ -348,7 +348,7 @@ def test_corpus_checkpoint_reliable_disk_bounded(spark, tmp_path):
     is O(live generation), not O(iterations): the same number of
     rdd-* directories remains after 1 and after 4 EM iterations, for
     both the mono and the join-mode trainer."""
-    from mr_lda_spark.plans import lda, lda_join
+    from mr_lda_spark.plans import lda
 
     corpus = spark.createDataFrame(
         [(d, [1 + d % 5, 1 + (d + 1) % 5], [2, 1]) for d in range(12)],
@@ -372,9 +372,9 @@ def test_corpus_checkpoint_reliable_disk_bounded(spark, tmp_path):
                 max_iterations=it, **kw,
             )
         else:
-            lda_join.train_beta_join(
+            lda.train(
                 spark, tall, corpus_checkpoint="reliable",
-                max_iterations=it, **kw,
+                max_iterations=it, beta_mode="join", **kw,
             )
         counts[(mode, it)] = len(_rdd_dirs_under(d))
 

@@ -1,8 +1,9 @@
 """Polylingual LDA invariants: shared gamma across per-language betas.
 
-Builds a synthetic polylingual corpus from the documents table: docs
-sharing (doc_id % 150) form one multilingual document; each source doc
-contributes its language's bag of words.
+Uses the conftest ``poly_tall`` corpus: docs sharing (doc_id % 150)
+form one multilingual document; each source doc contributes its
+language's bag of words.  Polylingual training is ``lda.train`` over
+offset term ids (``lda.term_offsets``).
 """
 
 import numpy as np
@@ -10,49 +11,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_lda_spark.operators import parse
-from mr_lda_spark.plans import polylda
+from mr_lda_spark.plans import lda
 
 K = 3
-LANGS = ["en", "es"]  # keep 2 languages for speed
 
 
 @pytest.fixture(scope="module")
-def poly(spark, documents):
-    docs = documents.filter(F.col("lang").isin(LANGS)).withColumn(
-        "poly_doc_id", F.col("doc_id") % 150
-    )
-    tokens = parse.tokenize(docs, doc_id_col="poly_doc_id").join(
-        docs.select(F.col("poly_doc_id").alias("doc_id"), "lang").distinct(),
-        "doc_id",
-    )
-    # lang string -> dense 0-based index
-    lang_expr = F.lit(None).cast("int")
-    for i, lang in enumerate(LANGS):
-        lang_expr = F.when(F.col("lang") == lang, F.lit(i)).otherwise(lang_expr)
-    tokens = tokens.withColumn("lang", lang_expr)
-    dicts = parse.build_dictionary_per_lang(tokens)
-    tall = (
-        tokens.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-        .join(F.broadcast(dicts.select("lang", "term", "term_id")), ["lang", "term"])
-        .select(
-            "doc_id",
-            "lang",
-            "term_id",
-            F.col("term_count").cast("int").alias("term_count"),
-        )
-    )
-    corpus = polylda.poly_corpus_from_tall(tall, n_languages=len(LANGS))
-    num_terms = [
-        dicts.filter(F.col("lang") == i).count() for i in range(len(LANGS))
-    ]
-    return corpus, num_terms
-
-
-@pytest.fixture(scope="module")
-def poly_trained(spark, poly):
-    corpus, num_terms = poly
-    return polylda.train_poly(
+def poly_trained(spark, poly_tall):
+    corpus, num_terms = poly_tall
+    return lda.train(
         spark,
         corpus,
         num_terms,
@@ -63,8 +30,8 @@ def poly_trained(spark, poly):
     )
 
 
-def test_poly_dictionary_per_lang_ids(spark, poly):
-    corpus, num_terms = poly
+def test_poly_dictionary_per_lang_ids(spark, poly_tall):
+    corpus, num_terms = poly_tall
     assert len(num_terms) == 2 and all(v > 0 for v in num_terms)
 
 
@@ -76,13 +43,18 @@ def test_poly_elbo_monotone(poly_trained):
         assert b >= a - abs(a) * 1e-6, h
 
 
-def test_poly_gamma_shared_mass(spark, poly, poly_trained):
+def test_poly_gamma_shared_mass(spark, poly_tall, poly_trained):
     """Σγ ≈ Σα + N_total where N_total spans *all* languages — the
     defining property of the shared posterior."""
-    corpus, num_terms = poly
-    final_corpus, state = poly_trained
+    corpus, num_terms = poly_tall
+    gamma, state = poly_trained
+    final_corpus = (
+        parse.corpus_to_doc_form(lda.unified_corpus(corpus, num_terms))
+        .drop("gamma")
+        .join(gamma, "doc_id", "left")
+    )
     # Re-run one gamma-only iteration at fixed alpha for the invariant.
-    _, state2 = polylda.train_poly(
+    _, state2 = lda.train(
         spark,
         final_corpus,
         num_terms,
@@ -96,7 +68,7 @@ def test_poly_gamma_shared_mass(spark, poly, poly_trained):
         final_corpus.select(
             "gamma",
             F.aggregate(
-                F.flatten("lang_term_counts"),
+                "term_counts",
                 F.lit(0),
                 lambda a, x: a + x,
             ).alias("n_total"),
@@ -118,14 +90,28 @@ def test_poly_betas_normalized(poly_trained):
 
 
 @pytest.mark.slow
-def test_poly_reproducible(spark, poly):
-    corpus, num_terms = poly
-    _, s1 = polylda.train_poly(
+def test_poly_reproducible(spark, poly_tall):
+    corpus, num_terms = poly_tall
+    _, s1 = lda.train(
         spark, corpus, num_terms, K, max_iterations=2, max_gamma_iter=5, seed=4
     )
-    _, s2 = polylda.train_poly(
+    _, s2 = lda.train(
         spark, corpus, num_terms, K, max_iterations=2, max_gamma_iter=5, seed=4
     )
     np.testing.assert_allclose(s1.alpha, s2.alpha, rtol=1e-12)
     for a, b in zip(s1.elog_betas, s2.elog_betas):
         np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-12)
+
+
+def test_term_offsets_encoding():
+    """The one (lang, term_id) → id map: offset[l] = Σ_{l'<l}(V_l'+1),
+    mono unchanged, and the stacked β blocks line up with it."""
+    assert lda.term_offsets(7) == [0]
+    assert lda.term_offsets([7]) == [0]
+    assert lda.term_offsets([3, 5, 2]) == [0, 4, 10]
+    state = lda.LdaState(
+        alpha=np.ones(2), elog_beta=np.zeros((13, 2)), num_terms=[3, 5, 2]
+    )
+    assert [b.shape[0] for b in state.elog_betas] == [4, 6, 3]
+    state.elog_betas[1][2] = 1.0  # a view: (lang 1, term 2) is row 6
+    assert state.elog_beta[4 + 2, 0] == 1.0

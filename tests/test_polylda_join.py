@@ -1,65 +1,26 @@
 """Join-mode (distributed per-language β) polylingual EM must agree
 with broadcast mode — the same parity contract as test_lda_join, with
-the lang dimension riding the packed (lang << 32 | term_id) key."""
+the lang dimension riding the offset term id (``lda.term_offsets``)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
-
-from mr_lda_spark.operators import parse
-from mr_lda_spark.plans import polylda, polylda_join
+from mr_lda_spark.plans import lda
 
 K = 3
 ITERS = 3
 LANGS = ["en", "es"]
 
 
-@pytest.fixture(scope="module")
-def poly_tall(spark, documents):
-    docs = documents.filter(F.col("lang").isin(LANGS)).withColumn(
-        "poly_doc_id", F.col("doc_id") % 150
-    )
-    tokens = parse.tokenize(docs, doc_id_col="poly_doc_id").join(
-        docs.select(F.col("poly_doc_id").alias("doc_id"), "lang").distinct(),
-        "doc_id",
-    )
-    lang_expr = F.lit(None).cast("int")
-    for i, lang in enumerate(LANGS):
-        lang_expr = F.when(F.col("lang") == lang, F.lit(i)).otherwise(lang_expr)
-    tokens = tokens.withColumn("lang", lang_expr)
-    dicts = parse.build_dictionary_per_lang(tokens)
-    tall = (
-        tokens.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-        .join(
-            F.broadcast(dicts.select("lang", "term", "term_id")),
-            ["lang", "term"],
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "term_id",
-            F.col("term_count").cast("int").alias("term_count"),
-        )
-        .localCheckpoint()
-    )
-    num_terms = [
-        dicts.filter(F.col("lang") == i).count() for i in range(len(LANGS))
-    ]
-    return tall, num_terms
-
-
 @pytest.mark.slow
 def test_poly_join_matches_broadcast(spark, poly_tall):
     tall, num_terms = poly_tall
-    corpus = polylda.poly_corpus_from_tall(tall, n_languages=len(LANGS))
 
-    _, s_bc = polylda.train_poly(
-        spark, corpus, num_terms, K,
+    _, s_bc = lda.train(
+        spark, tall, num_terms, K,
         max_iterations=ITERS, max_gamma_iter=10, seed=9, converge=0.0,
     )
-    gamma_df, s_join = polylda_join.train_poly_join(
-        spark, tall, num_terms, K,
+    gamma_df, s_join = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=ITERS, max_gamma_iter=10, seed=9, converge=0.0,
         shuffle_partitions=8,
     )
@@ -77,20 +38,19 @@ def test_poly_join_matches_broadcast(spark, poly_tall):
             rtol=1e-6,
             atol=1e-8,
         )
-    assert gamma_df.count() == corpus.count()
+    assert gamma_df.count() == tall.select("doc_id").distinct().count()
 
 
 @pytest.mark.slow
 def test_poly_join_gamma_matches_broadcast(spark, poly_tall):
     """Per-document γ parity, not just corpus-level aggregates."""
     tall, num_terms = poly_tall
-    corpus = polylda.poly_corpus_from_tall(tall, n_languages=len(LANGS))
-    final_bc, _ = polylda.train_poly(
-        spark, corpus, num_terms, K,
+    final_bc, _ = lda.train(
+        spark, tall, num_terms, K,
         max_iterations=2, max_gamma_iter=8, seed=4, converge=0.0,
     )
-    gamma_join, _ = polylda_join.train_poly_join(
-        spark, tall, num_terms, K,
+    gamma_join, _ = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=2, max_gamma_iter=8, seed=4, converge=0.0,
         shuffle_partitions=8,
     )
@@ -104,8 +64,8 @@ def test_poly_join_gamma_matches_broadcast(spark, poly_tall):
 @pytest.mark.slow
 def test_poly_join_elbo_monotone(spark, poly_tall):
     tall, num_terms = poly_tall
-    _, state = polylda_join.train_poly_join(
-        spark, tall, num_terms, K,
+    _, state = lda.train(
+        spark, tall, num_terms, K, beta_mode="join",
         max_iterations=ITERS, max_gamma_iter=10, seed=5, converge=0.0,
         shuffle_partitions=8,
     )
@@ -116,29 +76,32 @@ def test_poly_join_elbo_monotone(spark, poly_tall):
 
 def test_poly_infer_join_matches_broadcast_infer(spark, poly_tall):
     """Held-out polylingual scoring: per-doc γ and ll through the
-    packed-key β join (auto-broadcast disabled) must match broadcast
-    infer_poly under the same trained state."""
+    β join on offset term ids (auto-broadcast disabled) must match
+    broadcast infer under the same trained state."""
     tall, num_terms = poly_tall
-    corpus = polylda.poly_corpus_from_tall(tall, n_languages=len(LANGS))
-    _, state = polylda.train_poly(
-        spark, corpus, num_terms, K,
+    _, state = lda.train(
+        spark, tall, num_terms, K,
         max_iterations=2, max_gamma_iter=8, seed=9, converge=0.0,
     )
     bc = {
         r["doc_id"]: (r["gamma"], r["doc_ll"])
-        for r in polylda.infer_poly(
-            spark, corpus, state, max_gamma_iter=10
+        for r in lda.infer(
+            spark, tall, state, max_gamma_iter=10
         ).collect()
     }
-    beta_df = polylda_join.poly_beta_relation(spark, state)
+    join_state = lda.LdaState(
+        alpha=state.alpha,
+        elog_beta=lda.beta_relation(lda.beta_dataframe(spark, state)),
+        num_terms=num_terms,
+    )
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "-1")
     try:
         jn = {
             r["doc_id"]: (r["gamma"], r["doc_ll"])
-            for r in polylda_join.infer_poly_join(
-                spark, tall, beta_df, state.alpha, max_gamma_iter=10
+            for r in lda.infer(
+                spark, tall, join_state, max_gamma_iter=10
             ).collect()
         }
     finally:

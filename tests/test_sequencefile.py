@@ -180,7 +180,7 @@ def test_sequencefile_corpus_trains(spark, tmp_path):
 def test_poly_document_roundtrip_and_train(spark, tmp_path):
     """polylda.Document wire format (polylda/Document.java:176-214,
     259-287): null language slots, per-language maps, gamma — and the
-    decoded corpus feeds plans.polylda.train_poly."""
+    decoded corpus feeds plans.lda.train."""
     raw = sf.encode_poly_document([[1, 3], []], [[2, 1], []], [0.5, 0.5])
     ids, counts, gamma = sf.decode_poly_document(raw)
     assert ids == [[1, 3], []] and counts == [[2, 1], []]
@@ -216,10 +216,10 @@ def test_poly_document_roundtrip_and_train(spark, tmp_path):
     row = corpus.filter("doc_id = 0").collect()[0]
     assert list(row["lang_term_ids"][1]) == []  # doc 0 misses lang 1
 
-    from mr_lda_spark.plans import polylda
+    from mr_lda_spark.plans import lda
 
-    _, state = polylda.train_poly(
-        spark, corpus, num_terms_per_lang=[14, 11], num_topics=2,
+    _, state = lda.train(
+        spark, corpus, num_terms=[14, 11], num_topics=2,
         max_iterations=2, max_gamma_iter=8, seed=5,
     )
     assert len(state.elog_betas) == 2

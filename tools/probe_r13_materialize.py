@@ -12,7 +12,7 @@ the claim by running each consumer both ways at two corpus sizes:
   because group-key predicate pushdown de-canonicalizes the exchanges
   and ReuseExchange never fires).
 
-Protocol (mirrors tools/probe_r12_polylda.py):
+Protocol (the paired growth protocol recorded in SCALING_r12_polylda.json):
 - ×10 clones grow the CORPUS only: documents doc_ids offset by
   10M·rep with sources unchanged (sketch stays groups×k), embeddings
   vec_ids offset by 100k·rep (ANN queries stay the 5 rep-0 vectors,
