@@ -336,6 +336,17 @@ NOOP_FORCE = {
     "events_funnel_conversion",
 }
 
+# The warm-up set: one representative of each major plan shape (see
+# main); tools/perf.py profile warms with the same set.
+WARM_QUERIES = (
+    "q1_pricing_summary",
+    "q3_top_orders",
+    "orders_running_total",
+    "parse_term_dict",
+    "dedup_jaccard_pairs",
+    "lda_train_topics",
+)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -357,14 +368,7 @@ def main() -> None:
     # 32 s first-iteration time at sf0.1); on a real cluster that spawn
     # happens once per executor lifetime, so letting it land on one
     # headline query would measure deployment cost, not the operator.
-    for warm in (
-        "q1_pricing_summary",
-        "q3_top_orders",
-        "orders_running_total",
-        "parse_term_dict",
-        "dedup_jaccard_pairs",
-        "lda_train_topics",
-    ):
+    for warm in WARM_QUERIES:
         queries_registry.QUERIES[warm](spark, "/root/testdata/sf0.001").count()
 
     # Noise discipline: the single-shot protocol is kept per PASS

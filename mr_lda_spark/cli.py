@@ -81,14 +81,18 @@ def cmd_parse(args) -> None:
         max_df_frac=args.maximum_document_frequency,
     )
     corpus = parse.encode_corpus(tokens, dictionary)
-    write_table(dictionary, os.path.join(args.output, "term"))
-    write_table(corpus, os.path.join(args.output, "document"))
+    term_dir = os.path.join(args.output, "term")
+    document_dir = os.path.join(args.output, "document")
+    write_table(dictionary, term_dir)
+    write_table(corpus, document_dir)
+    # Counts from the WRITTEN parquet (footer metadata): counting the
+    # lineage would re-run tokenize → term_stats → encode.
     print(
         json.dumps(
             {
                 "documents": num_docs,
-                "vocabulary": dictionary.count(),
-                "encoded_cells": corpus.count(),
+                "vocabulary": spark.read.parquet(term_dir).count(),
+                "encoded_cells": spark.read.parquet(document_dir).count(),
                 "output": args.output,
             }
         )

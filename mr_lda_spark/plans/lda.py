@@ -84,6 +84,11 @@ _STATS_HEAD = 3
 _PHI_FLUSH = 1 << 18
 
 
+class EmptyCorpusError(ValueError):
+    """The corpus has no tokens: every document is empty (P7), so there
+    is nothing to fit α or β to."""
+
+
 @dataclass
 class LdaState:
     """Driver-side model state.
@@ -805,6 +810,10 @@ def train(
             # D and N as the E-step saw them: empty documents (P7) are
             # in neither.
             num_docs, state.total_tokens = docs, tokens
+            if tokens <= 0:
+                out.unpersist()
+                placement.release()
+                raise EmptyCorpusError("corpus has no tokens: every document is empty")
         placement.mstep(out)
         gamma_df = ckpt_gc.cut(  # D×K doubles; cuts lineage
             out.filter(F.col("kind") == "doc").select(

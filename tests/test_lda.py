@@ -251,6 +251,20 @@ def test_empty_documents_leave_alpha_unchanged(spark, beta_mode):
     assert got.total_tokens == ref.total_tokens
 
 
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+def test_corpus_without_tokens_is_a_named_error(spark, beta_mode):
+    """No rows at all, or only empty documents (an all-stopword parse):
+    the E-step emits no statistics, so training stops with
+    EmptyCorpusError after the first pull instead of dividing by a
+    zero ELBO at the convergence check."""
+    schema = "doc_id long, term_ids array<int>, term_counts array<int>"
+    for rows in ([], [(d, [], []) for d in range(4)]):
+        corpus = spark.createDataFrame(rows, schema)
+        with pytest.raises(lda.EmptyCorpusError, match="no tokens"):
+            lda.train(spark, corpus, 6, 3, max_iterations=3, max_gamma_iter=4,
+                      beta_mode=beta_mode)
+
+
 def _kernel_batches(elog_beta, carry_beta):
     """Two pandas batches of a tiny seeded corpus (one doc empty), in
     the broadcast (gather) or the join (row-carried β slices) layout."""

@@ -128,9 +128,10 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
     tokenize(docs, stopwords=STOPWORDS), and holds no second cache."""
     from mr_lda_spark import queries_registry as qr
 
-    qr._PARSE_CACHE.clear()
+    key = (spark.sparkContext.applicationId, sf_dir)
+    fresh = key not in qr._PARSE_CACHE
+    docs, _, tokens_raw, tokens_stop, dictionary = qr._parse_shared(spark, sf_dir)
     try:
-        docs, _, tokens_raw, tokens_stop, _ = qr._parse_shared(spark, sf_dir)
         assert tokens_raw.storageLevel.useMemory  # the one token cache
         assert not tokens_stop.storageLevel.useMemory  # a view, not a cache
         got = sorted(map(tuple, tokens_stop.collect()))
@@ -139,5 +140,7 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
         )
         assert got == want
     finally:
-        qr._PARSE_CACHE.clear()
-        spark.catalog.clearCache()  # release the session-scoped persists
+        if fresh:  # release only what this call persisted
+            del qr._PARSE_CACHE[key]
+            tokens_raw.unpersist()
+            dictionary.unpersist()
