@@ -58,11 +58,13 @@ def digamma(x):
     scalar = x.ndim == 0
     x = np.atleast_1d(x).copy()
     result = np.zeros_like(x)
-    # Recurrence psi(x) = psi(x+1) - 1/x until x >= SHIFT.
+    # Recurrence psi(x) = psi(x+1) - 1/x until x >= SHIFT, as whole-array
+    # steps: subtracting 0.0 and adding False leave finished elements
+    # bit-for-bit untouched, and no boolean-mask gather/scatter runs.
     mask = x < _SHIFT
     while np.any(mask):
-        result[mask] -= 1.0 / x[mask]
-        x[mask] += 1.0
+        result -= np.where(mask, 1.0 / x, 0.0)
+        x += mask
         mask = x < _SHIFT
     inv = 1.0 / x
     inv2 = inv * inv

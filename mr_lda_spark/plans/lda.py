@@ -89,6 +89,12 @@ class EmptyCorpusError(ValueError):
     is nothing to fit α or β to."""
 
 
+def _check_gamma_iter(max_gamma_iter: int) -> None:
+    """At least one sweep: with none the E-step has no φ to emit."""
+    if max_gamma_iter < 1:
+        raise ValueError(f"max_gamma_iter must be >= 1, got {max_gamma_iter}")
+
+
 @dataclass
 class LdaState:
     """Driver-side model state.
@@ -218,6 +224,12 @@ def init_elog_beta(num_terms: int, num_topics: int, seed: int) -> np.ndarray:
     return log_raw - norm
 
 
+# E-step batches whose smallest φ normalizer in any linear-space sweep
+# falls below this re-run in log space: the mass the linear form can
+# lose to underflow is then below 1e-120 relative.
+_NORM_FLOOR = 1e-200
+
+
 def numpy_sweep_backend(
     elb: np.ndarray,
     counts_pad: np.ndarray,
@@ -233,47 +245,85 @@ def numpy_sweep_backend(
     E-step hot loop is expressed as dense tensor ops on
     ``(B, n_max, K)`` arrays, so an accelerator backend (CuPy, JAX,
     torch) can drop in by implementing this exact signature — move the
-    three inputs to device memory, run the same einsum/logsumexp
-    algebra, return host ndarrays.  Everything outside this function
-    (Arrow decode, padding, φ accumulation) stays unchanged, and the
-    backend callable is shipped to executors via the normal
-    closure-serialization path, one resolve per task.
+    three inputs to device memory, run the same contractions, return
+    host ndarrays.  Everything outside this function (Arrow decode,
+    padding, φ accumulation) stays unchanged, and the backend callable
+    is shipped to executors via the normal closure-serialization path,
+    one resolve per task.
 
     Inputs: ``elb`` (B, n_max, K) E[log β] per token slot;
     ``counts_pad`` (B, n_max) token counts, 0 on padding; ``gamma``
     (B, K) the warm-start state (mutated freely); ``alpha`` (K,).
     Returns ``(gamma, lpn, phi)`` with ``lpn`` the log-normalized φ of
     the LAST sweep, both (B, n_max, K).
+
+    The sweeps run in linear space, the exp(E[log β]) form of online VB
+    (Hoffman, Blei & Bach 2010).  E[log β] is exponentiated once per
+    batch, shifted so each token's largest entry is exactly 1; each
+    sweep is then two contractions over (B, n_max, K) instead of the
+    reference's per-token logsumexp (DocumentMapper.java:209-247):
+
+        eb   = exp(elb − max_k elb)                 once per batch
+        et   = exp(ψ(γ) − max_k ψ(γ))                (B, K)
+        norm = eb · et                               (B, n_max)
+        γ    = α + et ⊙ ((c / norm) · eb)            (B, K)
+
+    and φ = eb ⊙ et / norm is formed only after the last sweep, in log
+    space.  With both factors shifted, ``norm`` is at least the
+    document's ``et`` on the token's best topic; a batch where some
+    ``norm`` still drops below ``_NORM_FLOOR`` (tiny α and a token whose
+    mass sits on a topic the document lacks) re-runs from its starting
+    γ in log space (``_log_sweep``).
     """
-    lpn = None
-    phi = None
+    gamma0 = gamma
+    shifted = elb - elb.max(axis=2, keepdims=True)
+    eb = np.exp(shifted)
     for _ in range(max_gamma_iter):
-        dg = digamma(gamma)  # (B, K)
-        lp = elb + dg[:, None, :]
-        m = lp.max(axis=2, keepdims=True)
-        norm = m + np.log(np.exp(lp - m).sum(axis=2, keepdims=True))
-        lpn = lp - norm  # (B, n_max, K)
-        phi = np.exp(lpn)
-        # γ = α + Σ_w c_w φ_w — φ is a normalized probability,
-        # so the sum is numerically safe in LINEAR space; the
-        # log-space logaddexp fold the reference uses
-        # (DocumentMapper.java:237-247) is only needed when the
-        # accumulator itself lives in log space.  Linear form
-        # saves a (B, n_max+1, K) concatenate + two exp/log
-        # passes per sweep (~1.5× sweep cost at sf0.1).
+        dg = digamma(gamma)
+        dg -= dg.max(axis=1, keepdims=True)
+        et = np.exp(dg)
+        norm = np.matmul(eb, et[:, :, None])[:, :, 0]
+        if norm.min() < _NORM_FLOOR:
+            return _log_sweep(
+                elb, counts_pad, gamma0, alpha, max_gamma_iter, gamma_tol
+            )
         prev_gamma = gamma
-        gamma = alpha[None, :] + np.einsum(
-            "bn,bnk->bk", counts_pad, phi
-        )
-        if gamma_tol > 0.0 and np.max(
-            np.abs(gamma - prev_gamma) / prev_gamma
-        ) < gamma_tol:
-            # Convergence-gated sweeps (SURVEY §7.3): the
-            # reference burns a fixed 100 sweeps per doc per
-            # iteration (Settings.java:54) — warm-started
-            # iterations converge in a handful.
+        gamma = alpha[None, :] + et * np.matmul(
+            (counts_pad / norm)[:, None, :], eb
+        )[:, 0, :]
+        if _converged(gamma, prev_gamma, gamma_tol):
+            break
+    # lpn = log(eb ⊙ et / norm), in place of the no-longer-needed shift.
+    lpn = shifted
+    lpn += dg[:, None, :]
+    lpn -= np.log(norm)[:, :, None]
+    return gamma, lpn, np.exp(lpn, out=eb)
+
+
+def _log_sweep(elb, counts_pad, gamma, alpha, max_gamma_iter, gamma_tol):
+    """``numpy_sweep_backend`` in log space: a per-token logsumexp each
+    sweep, so no normalizer can underflow.  Several times slower; the
+    fallback for batches the linear form cannot represent."""
+    # Shifting each token's E[log β] to a max of 0 keeps ψ(γ) from being
+    # rounded away on tokens whose every entry sits at the ψ(η) floor.
+    shifted = elb - elb.max(axis=2, keepdims=True)
+    for _ in range(max_gamma_iter):
+        lp = shifted + digamma(gamma)[:, None, :]
+        m = lp.max(axis=2, keepdims=True)
+        lpn = lp - (m + np.log(np.exp(lp - m).sum(axis=2, keepdims=True)))
+        phi = np.exp(lpn)
+        prev_gamma = gamma
+        gamma = alpha[None, :] + np.einsum("bn,bnk->bk", counts_pad, phi)
+        if _converged(gamma, prev_gamma, gamma_tol):
             break
     return gamma, lpn, phi
+
+
+def _converged(gamma, prev_gamma, gamma_tol: float) -> bool:
+    """Convergence-gated sweeps (SURVEY §7.3): the reference burns a
+    fixed 100 sweeps per doc per iteration (Settings.java:54) —
+    warm-started iterations converge in a handful.  Off at tol 0."""
+    return gamma_tol > 0.0 and np.max(np.abs(gamma - prev_gamma) / prev_gamma) < gamma_tol
 
 
 def _segment_lse(flat_terms: np.ndarray, flat_vecs: np.ndarray):
@@ -549,8 +599,8 @@ class _BroadcastBeta:
     def mstep(self, out: DataFrame) -> None:
         state = self.state
         lam = np.full(state.elog_beta.shape, -np.inf)
-        for r in _combine_phi(out).collect():
-            lam[r["term_id"], r["topic"]] = r["lse"]
+        pdf = _combine_phi(out).toPandas()  # ~V×K rows: one Arrow pull
+        lam[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["lse"].to_numpy()
         elog = np.empty_like(lam)
         for o, v in zip(term_offsets(state.num_terms), state.num_terms):
             blk = slice(o, o + v + 1)
@@ -765,6 +815,7 @@ def train(
     """
     from mr_lda_spark.session import ensure_package_shipped
 
+    _check_gamma_iter(max_gamma_iter)
     ensure_package_shipped(spark)
     K = num_topics
     vocab = [int(num_terms)] if np.isscalar(num_terms) else [int(v) for v in num_terms]
@@ -893,6 +944,7 @@ def infer(
     join on its own."""
     from mr_lda_spark.session import ensure_package_shipped
 
+    _check_gamma_iter(max_gamma_iter)
     ensure_package_shipped(spark)
     corpus = unified_corpus(corpus, state.num_terms)
     if isinstance(state.elog_beta, DataFrame):

@@ -265,6 +265,32 @@ def test_corpus_without_tokens_is_a_named_error(spark, beta_mode):
                       beta_mode=beta_mode)
 
 
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+def test_zero_gamma_iterations_is_a_named_error(spark, beta_mode):
+    """max_gamma_iter < 1 (``--gamma-iteration 0``) would leave the
+    E-step without φ; train and infer refuse it before any job runs."""
+    schema = "doc_id long, term_ids array<int>, term_counts array<int>"
+    corpus = spark.createDataFrame([(0, [1, 2], [1, 3])], schema)
+    elog_beta = lda.init_elog_beta(4, 3, seed=1)
+    state = lda.LdaState(
+        alpha=np.full(3, 0.3),
+        elog_beta=elog_beta if beta_mode == "broadcast"
+        else lda._matrix_relation(spark, elog_beta, [4]),
+        num_terms=[4],
+    )
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("gamma-iter-check", "")
+    try:
+        for n in (0, -1):
+            with pytest.raises(ValueError, match="max_gamma_iter must be >= 1"):
+                lda.train(spark, corpus, 4, 3, max_gamma_iter=n, beta_mode=beta_mode)
+            with pytest.raises(ValueError, match="max_gamma_iter must be >= 1"):
+                lda.infer(spark, corpus, state, max_gamma_iter=n)
+        assert tracker.getJobIdsForGroup("gamma-iter-check") == []
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+
+
 def _kernel_batches(elog_beta, carry_beta):
     """Two pandas batches of a tiny seeded corpus (one doc empty), in
     the broadcast (gather) or the join (row-carried β slices) layout."""

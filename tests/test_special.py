@@ -60,3 +60,43 @@ def test_vectorized_matches_scalar():
     vec_t = trigamma(xs)
     sc_t = np.array([trigamma(float(x)) for x in xs])
     np.testing.assert_allclose(vec_t, sc_t, rtol=0, atol=0)
+
+
+def _digamma_masked(x):
+    """digamma as it ran its recurrence before: boolean-mask fancy
+    indexing, one masked update per step."""
+    from mr_lda_spark.functions.special import _DIGAMMA_COEF, _SHIFT
+
+    x = np.asarray(x, dtype=np.float64)
+    scalar = x.ndim == 0
+    x = np.atleast_1d(x).copy()
+    result = np.zeros_like(x)
+    mask = x < _SHIFT
+    while np.any(mask):
+        result[mask] -= 1.0 / x[mask]
+        x[mask] += 1.0
+        mask = x < _SHIFT
+    inv = 1.0 / x
+    inv2 = inv * inv
+    series = np.zeros_like(x)
+    p = inv2.copy()
+    for c in _DIGAMMA_COEF:
+        series += c * p
+        p *= inv2
+    result += np.log(x) - 0.5 * inv - series
+    return result[0] if scalar else result
+
+
+@pytest.mark.parametrize(
+    "x",
+    [
+        np.logspace(-12, 6, 10001),
+        np.float64(0.37),
+        np.random.default_rng(0).gamma(0.5, 20.0, size=(600, 20)) + 1e-3,
+    ],
+    ids=["logspace", "0-d", "600x20"],
+)
+def test_digamma_bit_identical_to_masked_recurrence(x):
+    got, want = digamma(x), _digamma_masked(x)
+    assert np.shape(got) == np.shape(want)
+    assert np.array_equal(got, want)
