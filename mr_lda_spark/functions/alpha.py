@@ -42,8 +42,11 @@ def update_alpha_vector(
     non-positive.
     """
     alpha = np.asarray(alpha, dtype=np.float64).copy()
+    if alpha.shape[0] == 1:
+        # One topic: θ ≡ 1 for every document, so the ELBO does not
+        # depend on α (the Newton step would divide 0 by 0).
+        return alpha
     ss = np.asarray(alpha_sufficient_statistics, dtype=np.float64)
-    k = alpha.shape[0]
     decay = 0
 
     for _ in range(ALPHA_MAX_ITER + 1):

@@ -16,8 +16,12 @@ TermCombiner.java / TermReducer.java), and a driver-side Newton–Raphson
   documents, tokens, α sufficient statistic — the reference's counters,
   A6/A7).  γ is carried between iterations as a small (doc_id, gamma)
   table joined back onto the E-step rows.
-- M-step: the φ partials combine by a relational logsumexp, η smooths
-  them, and E[log β] = ψ(λ) − ψ(Σ_v λ) per (language, topic).
+- M-step: the φ partials combine by a plain sum, λ = η + Σ c·φ, and
+  E[log β] = ψ(λ) − ψ(Σ_v λ) per (language, topic).  The reference
+  sums in log space (``LogMath.add``) because its E-step did; the
+  sweep here is linear, and linear sums are exact for λ: η ≥ 1e-12,
+  so φ mass small enough to underflow cannot change η + Σ c·φ (log
+  space drops it too: logaddexp(log η, −700) == log η).
 
 **Polylingual is mono over offset term ids.**  Every (lang, term_id)
 maps to one int id ``term_id + offset[lang]``, ``offset[l] =
@@ -33,13 +37,12 @@ polylda/DocumentMapper.java:31-32).  Mono is L=1 with offset 0.
 
 - ``"broadcast"``: E[log β] is a driver matrix broadcast each iteration
   (the reference's DistributedCache β, J3); the kernel gathers it per
-  token, folds φ into a dense per-partition accumulator, and the driver
-  finishes the M-step on the model-sized matrix.
+  token, and the driver finishes the M-step on the model-sized matrix.
 - ``"join"``: β is a (term_id, beta[K]) relation that never touches the
   driver inside the loop — the scale path once V×K outgrows executor
   memory (SURVEY.md §7.3).  The corpus joins β on term_id and regroups
-  by document, so each row carries its tokens' β slices; the kernel
-  folds φ into a size-bounded dict, and the M-step is relational.
+  by document, so each row carries its tokens' β slices, and the M-step
+  is relational.
 """
 
 from __future__ import annotations
@@ -55,18 +58,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mr_lda_spark.functions.alpha import update_alpha_scalar, update_alpha_vector
-from mr_lda_spark.functions.logmath import log_add, logsumexp_agg
 from mr_lda_spark.functions.special import digamma, gammaln
 from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
     cut_corpus_lineage,
 )
 
-DEFAULT_LOG_ETA = math.log(1e-12)  # Settings.java:58
+DEFAULT_ETA = 1e-12  # Settings.java:58
+DEFAULT_LOG_ETA = math.log(DEFAULT_ETA)
 
 # E-step output: 'doc' rows (id = doc_id, vec = γ, ll = doc ELBO),
-# 'phi' rows (id = term id, vec = the partition's log-φ sum) and one
-# 'stats' row per partition (vec = _STATS layout below).
+# 'phi' rows (id = term id, vec = the partition's Σ c·φ — a linear
+# sum: λ = η + Σ c·φ with η ≥ 1e-12 absorbs any mass the linear form
+# loses to underflow) and one 'stats' row per partition (vec =
+# _STATS layout below).
 _ESTEP_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
@@ -78,8 +83,8 @@ _ESTEP_SCHEMA = T.StructType(
 # stats vec = [ELBO, documents, tokens, α sufficient statistic (K)]
 _STATS_HEAD = 3
 
-# Join-mode φ dict flush bound (terms per partition before a partial
-# is emitted): a vocabulary past executor memory degrades to more
+# φ accumulator flush bound (terms per partition before a partial is
+# emitted): a vocabulary past executor memory degrades to more
 # partials, never to OOM.
 _PHI_FLUSH = 1 << 18
 
@@ -326,57 +331,29 @@ def _converged(gamma, prev_gamma, gamma_tol: float) -> bool:
     return gamma_tol > 0.0 and np.max(np.abs(gamma - prev_gamma) / prev_gamma) < gamma_tol
 
 
-def _segment_lse(flat_terms: np.ndarray, flat_vecs: np.ndarray):
-    """Vectorized per-term logsumexp of (n_rows, K) log values grouped
-    by ``flat_terms``: sort, reduceat max-shift, reduceat sum."""
-    order = np.argsort(flat_terms, kind="stable")
-    t = flat_terms[order]
-    v = flat_vecs[order]
-    bounds = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
-    mx = np.maximum.reduceat(v, bounds, axis=0)
-    seg_id = np.repeat(np.arange(len(bounds)), np.diff(np.r_[bounds, len(t)]))
-    sm = np.add.reduceat(np.exp(v - mx[seg_id]), bounds, axis=0)
-    return t[bounds], mx + np.log(sm)
+class _PhiSums:
+    """The E-step's in-mapper combine (A3): the partition's Σ c·φ per
+    term id as one sorted (ids, sums) pair, merged batch by batch and
+    emitted as a partial whenever it passes ``_PHI_FLUSH`` terms (sums
+    of partials are associative, so the combine downstream is
+    unchanged)."""
 
+    def __init__(self, K: int):
+        self.ids = np.empty(0, dtype=np.int64)
+        self.sums = np.empty((0, K))
 
-class _DensePhi:
-    """Broadcast placement's in-mapper combine (A3): the partition's
-    log-φ sums in one dense (rows, K) matrix — bounded by model size,
-    emitted once at the end of the partition."""
-
-    def __init__(self, rows: int, K: int):
-        self.acc = np.full((rows, K), -np.inf)
-
-    def add(self, terms, contrib):
-        np.logaddexp.at(self.acc, terms, contrib)
+    def add(self, terms, cphi):
+        n = self.ids.size
+        ids, inv = np.unique(np.concatenate([self.ids, terms]), return_inverse=True)
+        sums = np.zeros((ids.size, self.sums.shape[1]))
+        sums[inv[:n]] = self.sums  # accumulated ids are distinct
+        np.add.at(sums, inv[n:], cphi)
+        self.ids, self.sums = ids, sums
 
     def drain(self, final: bool):
-        if final:
-            ids = np.flatnonzero(~np.all(np.isneginf(self.acc), axis=1))
-            yield ids, self.acc[ids]
-
-
-class _SparsePhi:
-    """Join placement's combine: per-batch ``_segment_lse`` folded into
-    a dict, flushed as a partial whenever it passes ``_PHI_FLUSH``
-    terms (logsumexp of partials is associative, so the relational
-    combine downstream is unchanged)."""
-
-    def __init__(self):
-        self.acc: dict = {}
-
-    def add(self, terms, contrib):
-        uniq, lse = _segment_lse(terms, contrib)
-        for t, vec in zip(uniq.tolist(), lse):
-            prev = self.acc.get(t)
-            self.acc[t] = vec if prev is None else np.logaddexp(prev, vec)
-
-    def drain(self, final: bool):
-        if self.acc and (final or len(self.acc) > _PHI_FLUSH):
-            ids = np.fromiter(self.acc, dtype=np.int64, count=len(self.acc))
-            vecs = np.array(list(self.acc.values()))
-            self.acc = {}
-            yield ids, vecs
+        if self.ids.size and (final or self.ids.size > _PHI_FLUSH):
+            yield self.ids, self.sums
+            self.ids, self.sums = self.ids[:0], self.sums[:0]
 
 
 def _estep_kernel(
@@ -411,9 +388,7 @@ def _estep_kernel(
 
     def run(batches):
         eb = elog_beta.value if hasattr(elog_beta, "value") else elog_beta
-        phi_acc = None
-        if learning:
-            phi_acc = _SparsePhi() if eb is None else _DensePhi(eb.shape[0], K)
+        phi_acc = _PhiSums(K)
         stats = np.zeros(_STATS_HEAD + K)
         seen_any = False
 
@@ -481,8 +456,7 @@ def _estep_kernel(
             )
             if learning:
                 valid = counts_pad > 0
-                contrib = lpn[valid] + np.log(counts_pad[valid])[:, None]
-                phi_acc.add(terms_pad[valid], contrib)
+                phi_acc.add(terms_pad[valid], counts_pad[valid][:, None] * phi[valid])
                 yield from phi_frames(final=False)
 
         if not seen_any:
@@ -510,12 +484,11 @@ def _estep(rows, gamma_df, alpha, elog_beta, max_gamma_iter, learning,
 
 
 def _combine_phi(out: DataFrame) -> DataFrame:
-    """(term_id, topic, lse): the partition φ partials merged by a
-    stable logsumexp in ONE shuffle.  Each (term, topic) key has at
-    most a few partials per input partition, so collect_list-ing them
-    into an array bounded by cluster parallelism (not data volume) and
-    folding the LSE with codegen array ops beats a two-shuffle
-    groupBy(max) + re-join plan."""
+    """(term_id, topic, phi): the partition φ partials summed in ONE
+    shuffle, whose partial aggregate plays the reference's TermCombiner.
+    Linear sums suffice where the reference folds ``LogMath.add``
+    (TermCombiner.java:30): λ = η + Σ c·φ with η ≥ 1e-12, so mass the
+    linear form loses to underflow is too small to change λ."""
     return (
         out.filter(F.col("kind") == "phi")
         .select(
@@ -523,20 +496,7 @@ def _combine_phi(out: DataFrame) -> DataFrame:
             F.posexplode("vec").alias("topic", "v"),
         )
         .groupBy("term_id", "topic")
-        .agg(F.collect_list("v").alias("vs"))
-        .withColumn("mx", F.array_max("vs"))
-        .select(
-            "term_id",
-            "topic",
-            (
-                F.col("mx")
-                + F.log(
-                    F.aggregate(
-                        "vs", F.lit(0.0), lambda acc, x: acc + F.exp(x - F.col("mx"))
-                    )
-                )
-            ).alias("lse"),
-        )
+        .agg(F.sum("v").alias("phi"))
     )
 
 
@@ -550,15 +510,13 @@ def _pull_stats(out: DataFrame, K: int):
     return float(total[0]), int(total[1]), float(total[2]), total[_STATS_HEAD:]
 
 
-def _mstep_beta(lam: np.ndarray, log_eta: np.ndarray | None) -> np.ndarray:
+def _mstep_beta(phi: np.ndarray, eta: np.ndarray | None) -> np.ndarray:
     """M-step finalization for one language block
-    (TermReducer.java:157-235): λ = logaddexp(log η, log φ), then
-    E[log β] = ψ(e^λ) − ψ(Σ_v e^λ).  Row 0 is the reserved index."""
-    if log_eta is None:
-        log_eta = DEFAULT_LOG_ETA
-    lam_exp = np.exp(np.logaddexp(log_eta, lam)[1:])
-    elog = np.full(lam.shape, DEFAULT_LOG_ETA)
-    elog[1:] = digamma(lam_exp) - digamma(lam_exp.sum(axis=0))[None, :]
+    (TermReducer.java:157-235): λ = η + Σ c·φ, then
+    E[log β] = ψ(λ) − ψ(Σ_v λ).  Row 0 is the reserved index."""
+    lam = phi[1:] + (DEFAULT_ETA if eta is None else eta[1:])
+    elog = np.full(phi.shape, DEFAULT_LOG_ETA)
+    elog[1:] = digamma(lam) - digamma(lam.sum(axis=0))[None, :]
     return elog
 
 
@@ -572,14 +530,14 @@ class _BroadcastBeta:
                  truncate_beta, n_parts):
         self.spark, self.state, self.checkpoint = spark, state, checkpoint
         self.truncate_beta, self.n_parts = truncate_beta, n_parts
-        self.log_eta = None
+        self.eta = None
         if eta_seeds is not None:
             from mr_lda_spark.operators.informed_prior import eta_from_rows
 
-            # Dense (rows, K) log-prior over the stacked ids (block
-            # starts included; _mstep_beta never reads them).
+            # Dense (rows, K) prior over the stacked ids (block starts
+            # included; _mstep_beta never reads them).
             rows = state.elog_beta.shape[0]
-            self.log_eta = eta_from_rows(eta_seeds, rows - 1, len(state.alpha))
+            self.eta = np.exp(eta_from_rows(eta_seeds, rows - 1, len(state.alpha)))
 
     def load(self, corpus: DataFrame):
         doc = _doc_form(corpus)
@@ -598,13 +556,13 @@ class _BroadcastBeta:
 
     def mstep(self, out: DataFrame) -> None:
         state = self.state
-        lam = np.full(state.elog_beta.shape, -np.inf)
+        phi = np.zeros(state.elog_beta.shape)
         pdf = _combine_phi(out).toPandas()  # ~V×K rows: one Arrow pull
-        lam[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["lse"].to_numpy()
-        elog = np.empty_like(lam)
+        phi[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["phi"].to_numpy()
+        elog = np.empty_like(phi)
         for o, v in zip(term_offsets(state.num_terms), state.num_terms):
             blk = slice(o, o + v + 1)
-            eb = _mstep_beta(lam[blk], None if self.log_eta is None else self.log_eta[blk])
+            eb = _mstep_beta(phi[blk], None if self.eta is None else self.eta[blk])
             n = self.truncate_beta
             if n is not None and n < v:
                 # The reference designed (then disabled) approximate
@@ -685,7 +643,7 @@ class _JoinBeta:
             )
 
             # Dense distributed η (InformedPrior.java:43-44): every
-            # (term, topic) gets its log-prior, because non-seed terms'
+            # (term, topic) gets its prior, because non-seed terms'
             # 0.001 mass is NOT negligible in the per-topic normalizer
             # — exactly the broadcast M-step's dense matrix, kept as a
             # DataFrame built with spark.range, never on the driver.
@@ -703,9 +661,9 @@ class _JoinBeta:
                 .select(
                     "term_id",
                     "topic",
-                    F.when(F.col("seed"), F.lit(float(LOG_ETA_SEED)))
-                    .otherwise(F.lit(float(LOG_ETA_OTHER)))
-                    .alias("log_eta"),
+                    F.when(F.col("seed"), F.lit(float(np.exp(LOG_ETA_SEED))))
+                    .otherwise(F.lit(float(np.exp(LOG_ETA_OTHER))))
+                    .alias("eta"),
                 ),
                 self.checkpoint,
             )
@@ -719,33 +677,27 @@ class _JoinBeta:
         return _join_rows(self.tall, self.beta, len(self.state.alpha)), None
 
     def mstep(self, out: DataFrame) -> None:
-        lam = _combine_phi(out)
+        phi = _combine_phi(out)
         if self.eta is None:
             # Uninformed η = 1e-12: the unobserved-term mass is
             # negligible in the normalizer, so the sparse
             # (observed-terms-only) relation suffices.
-            lam = lam.select(
-                "term_id", "topic",
-                log_add(F.col("lse"), F.lit(DEFAULT_LOG_ETA)).alias("log_lambda"),
-            )
+            lam = phi.select("term_id", "topic", (F.col("phi") + DEFAULT_ETA).alias("lam"))
         else:
-            lam = self.eta.join(lam, ["term_id", "topic"], "left").select(
+            lam = self.eta.join(phi, ["term_id", "topic"], "left").select(
                 "term_id", "topic",
-                log_add(F.coalesce("lse", F.lit(float("-inf"))), F.col("log_eta"))
-                .alias("log_lambda"),
+                (F.col("eta") + F.coalesce("phi", F.lit(0.0))).alias("lam"),
             )
         # β is a distribution per language per topic: the normalizer
         # groups by (lang, topic), L×K scalars, always broadcastable.
         lam = lam.withColumn("lang", _lang_of(F.col("term_id"), self.state.num_terms))
-        norms = logsumexp_agg(lam, ["lang", "topic"], "log_lambda", "log_norm")
+        norms = lam.groupBy("lang", "topic").agg(F.sum("lam").alias("norm"))
         beta = (
             lam.join(F.broadcast(norms), ["lang", "topic"])
             .select(
                 "term_id",
                 "topic",
-                (
-                    self.digamma(F.exp("log_lambda")) - self.digamma(F.exp("log_norm"))
-                ).alias("elog"),
+                (self.digamma(F.col("lam")) - self.digamma(F.col("norm"))).alias("elog"),
             )
             .groupBy("term_id")
             .agg(F.array_sort(F.collect_list(F.struct("topic", "elog"))).alias("p"))

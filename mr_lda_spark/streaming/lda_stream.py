@@ -20,7 +20,6 @@ loop's broadcast model; the corpus-sized work stays in executors.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -94,7 +93,7 @@ def process_micro_batch(
         0.0, None,
     ).persist()
     ll, n_docs, n_tokens, _ = _pull_stats(out, K)
-    rows = _combine_phi(out).collect() if n_docs else []
+    pdf = _combine_phi(out).toPandas() if n_docs else None  # one Arrow pull
     out.unpersist()
     eb_bc.unpersist()
     if n_docs == 0:
@@ -102,8 +101,7 @@ def process_micro_batch(
 
     # λ̂: batch stats rescaled as if the whole corpus looked like it.
     stats = np.zeros_like(model.lam)
-    for r in rows:
-        stats[r["term_id"], r["topic"]] = math.exp(r["lse"])
+    stats[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["phi"].to_numpy()
     scale = model.corpus_size_estimate / n_docs
     eta_prior = 1e-3  # symmetric topic-word prior
     lam_hat = eta_prior + scale * stats

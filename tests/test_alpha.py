@@ -5,6 +5,8 @@ Values ported verbatim from the reference's own unit tests
 to 1e-10.
 """
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -38,3 +40,12 @@ def test_update_alpha_scalar_golden(k, d, init, ss, expected):
     assert update_alpha_scalar(k, d, init, ss) == pytest.approx(
         expected, abs=PRECISION
     )
+
+
+def test_update_alpha_vector_single_topic_is_unchanged():
+    """K=1: θ ≡ 1 for every document, so the ELBO does not depend on α
+    and the update returns it as given, without the Newton step's 0/0."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = update_alpha_vector(40, np.array([0.7]), np.array([0.0]))
+    np.testing.assert_array_equal(out, [0.7])

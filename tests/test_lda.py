@@ -2,6 +2,8 @@
 the stochastic core is checked by invariants, not value hashes).
 """
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -291,6 +293,34 @@ def test_zero_gamma_iterations_is_a_named_error(spark, beta_mode):
         spark.sparkContext.setJobGroup(None, None)
 
 
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+@pytest.mark.parametrize(
+    "num_terms,num_topics", [(6, 1), (3, 5), (1, 3)], ids=["K=1", "K>V", "V=1"]
+)
+def test_degenerate_shapes_train_finite_models(spark, beta_mode, num_terms, num_topics):
+    """One topic, more topics than terms, and a one-term vocabulary
+    train to a finite β and a finite ELBO history in both β placements,
+    with no numpy warning on the driver (K=1 used to divide 0/0 in the
+    α update)."""
+    rows = []
+    for d in range(12):
+        terms = sorted({1 + d % num_terms, 1 + (d + 2) % num_terms})
+        rows.append((d, terms, [1 + (d + j) % 3 for j in range(len(terms))]))
+    corpus = spark.createDataFrame(
+        rows, "doc_id long, term_ids array<int>, term_counts array<int>"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        _, state = lda.train(
+            spark, corpus, num_terms, num_topics, max_iterations=2,
+            max_gamma_iter=4, converge=0.0, beta_mode=beta_mode,
+        )
+    assert state.elog_beta.shape == (num_terms + 1, num_topics)
+    assert np.all(np.isfinite(state.elog_beta))
+    assert len(state.history) == 2 and np.all(np.isfinite(state.history))
+    assert np.all(state.alpha > 0)
+
+
 def _kernel_batches(elog_beta, carry_beta):
     """Two pandas batches of a tiny seeded corpus (one doc empty), in
     the broadcast (gather) or the join (row-carried β slices) layout."""
@@ -319,8 +349,8 @@ def _kernel_batches(elog_beta, carry_beta):
 def test_kernel_gather_equals_row_carried_beta():
     """The one E-step kernel, called without Spark: a broadcast-gather
     input and a row-carried-β input give identical γ, per-doc ll and
-    α/ELBO stats rows, and the same merged φ partials (dense vs
-    size-bounded accumulator)."""
+    α/ELBO stats rows, and the same φ partials from the one
+    accumulator both placements share."""
     elog_beta = lda.init_elog_beta(12, K, seed=1)
     alpha = np.full(K, 0.3)
     outs = []
@@ -343,3 +373,57 @@ def test_kernel_gather_equals_row_carried_beta():
     assert phi_a.keys() == phi_b.keys()
     for t in phi_a:
         np.testing.assert_allclose(phi_a[t], phi_b[t], rtol=1e-13)
+
+
+@pytest.mark.parametrize("informed", [False, True])
+def test_linear_phi_sums_match_log_space_fold(monkeypatch, informed):
+    """The kernel's linear Σ c·φ partials, through ``_mstep_beta``, give
+    the E[log β] of the reference's log-space fold (``LogMath.add``,
+    TermCombiner.java:30 / TermReducer.java:157-235): per-slot
+    log φ + log c folded by logaddexp, then λ = logaddexp(log η, ·).
+    Terms repeat across the two batches, a tiny flush bound splits
+    terms over several partials, φ of term 3 on topic 1 underflows in
+    linear space, and term 7 sits at the ψ(η) floor."""
+    from types import SimpleNamespace
+
+    from mr_lda_spark.functions.special import digamma
+    from mr_lda_spark.operators.informed_prior import eta_from_rows
+
+    elog_beta = lda.init_elog_beta(12, K, seed=1)
+    elog_beta[3, 1] -= 900.0
+    elog_beta[7] = digamma(1e-12) - digamma(np.linspace(100.0, 900.0, K))
+    batches = _kernel_batches(elog_beta, carry_beta=False)
+    recorded = []
+
+    def recording_sweep(*args):
+        out = lda.numpy_sweep_backend(*args)
+        recorded.append((args[1], out[1]))
+        return out
+
+    monkeypatch.setattr(lda, "_PHI_FLUSH", 3)
+    run = lda._estep_kernel(
+        np.full(K, 0.3), 20, True, sweep_backend=recording_sweep, elog_beta=elog_beta
+    )
+    partials = pd.concat([f for f in run(batches) if f["kind"].iloc[0] == "phi"])
+    assert len(partials) > partials["id"].nunique()  # flushed mid-partition
+    phi = np.zeros(elog_beta.shape)
+    np.add.at(phi, partials["id"].to_numpy(), np.stack(partials["vec"]))
+
+    log_phi = np.full(elog_beta.shape, -np.inf)
+    for pdf, (counts_pad, lpn) in zip(batches, recorded):
+        terms_pad = np.zeros(counts_pad.shape, dtype=np.int64)
+        for j, t in enumerate(t for t in pdf["term_ids"] if t.size):
+            terms_pad[j, : t.size] = t
+        valid = counts_pad > 0
+        contrib = lpn[valid] + np.log(counts_pad[valid])[:, None]
+        np.logaddexp.at(log_phi, terms_pad[valid], contrib)
+    assert log_phi[3, 1] < -745.0 and phi[3, 1] == 0.0  # below the least double
+
+    log_eta, eta = lda.DEFAULT_LOG_ETA, None
+    if informed:
+        seeds = [{"topic": 0, "term_id": 3}, {"topic": 2, "term_id": 7}]
+        log_eta = eta_from_rows(SimpleNamespace(collect=lambda: seeds), 12, K)
+        eta = np.exp(log_eta)
+    lam = np.exp(np.logaddexp(log_eta, log_phi)[1:])
+    want = digamma(lam) - digamma(lam.sum(axis=0))[None, :]
+    np.testing.assert_allclose(lda._mstep_beta(phi, eta)[1:], want, rtol=1e-12)

@@ -37,35 +37,6 @@ def test_gammaln_recurrence(x):
 
 @given(
     st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=5),
-            st.floats(min_value=-700, max_value=700, allow_nan=False),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-@settings(max_examples=10, deadline=None)
-@pytest.mark.slow
-def test_logsumexp_agg_matches_numpy(spark, rows):
-    from mr_lda_spark.functions.logmath import logsumexp_agg
-
-    df = spark.createDataFrame(rows, schema="k int, v double")
-    got = {
-        r["k"]: r["lse"]
-        for r in logsumexp_agg(df, ["k"], "v", "lse").collect()
-    }
-    groups = {}
-    for k, v in rows:
-        groups.setdefault(k, []).append(v)
-    for k, vs in groups.items():
-        m = max(vs)
-        want = m + math.log(sum(math.exp(v - m) for v in vs))
-        assert got[k] == pytest.approx(want, rel=1e-12, abs=1e-12), (k, vs)
-
-
-@given(
-    st.lists(
         st.tuples(st.integers(0, 1000), st.integers(0, 1000)),
         min_size=1,
         max_size=80,
