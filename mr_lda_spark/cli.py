@@ -28,6 +28,45 @@ def _spark(app):
     return get_spark(app)
 
 
+class TruncatedSnapshotError(ValueError):
+    """A ``--model-index`` γ snapshot whose write never finished (no
+    ``_SUCCESS`` marker) or that lacks documents the corpus has:
+    resuming from it would cold-start part of the corpus silently."""
+
+
+def _resume_gamma(spark, path: str, corpus_doc):
+    """The (doc_id, gamma) snapshot at ``path``, checked whole before
+    any EM job runs.  Documents without tokens are never in a snapshot
+    (the E-step skips them), so only the others must be covered."""
+    from pyspark.sql import functions as F
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(spark._jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS")):
+        raise TruncatedSnapshotError(f"{path}: no _SUCCESS marker; the write did not finish")
+    gamma = spark.read.parquet(path).select("doc_id", "gamma")
+    missing = (
+        corpus_doc.filter(F.size("term_ids") > 0).select("doc_id")
+        .join(gamma, "doc_id", "left_anti").count()
+    )
+    if missing:
+        raise TruncatedSnapshotError(
+            f"{path}: {missing} documents of the corpus have no gamma in the snapshot"
+        )
+    return gamma
+
+
+def _scored_totals(spark, path: str) -> dict:
+    """``documents`` and ``total_log_likelihood`` of a written scoring
+    output, read back from the files instead of re-running its plan."""
+    from pyspark.sql import functions as F
+
+    total = spark.read.parquet(path).agg(
+        F.sum("doc_ll").alias("ll"), F.count(F.lit(1)).alias("docs")
+    ).collect()[0]
+    return {"documents": total["docs"], "total_log_likelihood": total["ll"]}
+
+
 def _apply_parallelism(args) -> None:
     """Reference parity for `-mapper N -reducer N`
     (VariationalInferenceOptions.java): on Spark the same levers are
@@ -137,7 +176,7 @@ def cmd_train(args) -> None:
     if args.model_index:
         # Resume (-modelindex): join the gamma snapshot back onto the
         # corpus so training warm-starts from iteration N's posterior.
-        gamma = spark.read.parquet(args.model_index).select("doc_id", "gamma")
+        gamma = _resume_gamma(spark, args.model_index, corpus_doc)
         corpus_doc = corpus_doc.drop("gamma").join(gamma, "doc_id", "left")
     num_terms = args.term or spark.read.parquet(
         os.path.join(args.input, "term")
@@ -269,18 +308,7 @@ def cmd_train_poly(args) -> None:
         )
         out = lda.infer(spark, tall, state, max_gamma_iter=args.gamma_iteration)
         write_table(out, args.output)
-        total = out.agg(
-            F.sum("doc_ll").alias("ll"), F.count(F.lit(1)).alias("docs")
-        ).collect()[0]
-        print(
-            json.dumps(
-                {
-                    "documents": total["docs"],
-                    "total_log_likelihood": total["ll"],
-                    "output": args.output,
-                }
-            )
-        )
+        print(json.dumps({**_scored_totals(spark, args.output), "output": args.output}))
         return
     final_gamma, state = lda.train(
         spark,
@@ -329,8 +357,6 @@ def cmd_infer(args) -> None:
     never materializes on the driver, so a V×K past executor memory
     scores the same way a broadcastable one does (below the threshold
     AQE broadcasts the join on its own)."""
-    from pyspark.sql import functions as F
-
     from mr_lda_spark.plans import lda
     from mr_lda_spark.sources.corpus import write_table
 
@@ -346,18 +372,7 @@ def cmd_infer(args) -> None:
         state, max_gamma_iter=args.gamma_iteration,
     )
     write_table(out, args.output)
-    total = out.agg(
-        F.sum("doc_ll").alias("ll"), F.count(F.lit(1)).alias("docs")
-    ).collect()[0]
-    print(
-        json.dumps(
-            {
-                "documents": total["docs"],
-                "total_log_likelihood": total["ll"],
-                "output": args.output,
-            }
-        )
-    )
+    print(json.dumps({**_scored_totals(spark, args.output), "output": args.output}))
 
 
 def cmd_informed_prior(args) -> None:

@@ -43,6 +43,7 @@ __all__ = [
     "cut_lineage",
     "cut_lineage_round",
     "cut_corpus_lineage",
+    "drop_cut",
     "release",
     "ReliableCheckpointSweeper",
 ]
@@ -99,7 +100,7 @@ def cut_lineage_round(
     raise _bad_mode(mode)
 
 
-def cut_corpus_lineage(df: DataFrame, mode) -> DataFrame:
+def cut_corpus_lineage(df: DataFrame, mode, eager: bool = True) -> DataFrame:
     """CORPUS-sized tier — the LDA/polyLDA trainers' lineage cuts
     (static corpus once, carried γ/β per iteration), where the
     answer-sized tradeoff inverts: recomputing a lost corpus-sized
@@ -112,6 +113,9 @@ def cut_corpus_lineage(df: DataFrame, mode) -> DataFrame:
 
     - ``True`` / ``"local"`` (default): ``localCheckpoint()`` — the
       fast path for stable executors (no checkpoint-dir I/O per cut).
+      ``eager=False`` leaves it to the first action that reads the
+      cut, so a per-iteration relation is computed once, inside the
+      job that consumes it.
     - ``"reliable"``: eager ``checkpoint()`` — requires
       ``spark.sparkContext.setCheckpointDir(...)`` (refused loudly
       otherwise); every cut survives executor loss, so a preempted
@@ -122,7 +126,7 @@ def cut_corpus_lineage(df: DataFrame, mode) -> DataFrame:
     if mode is False or mode is None:
         return df
     if mode is True or mode == "local":
-        return df.localCheckpoint()
+        return df.localCheckpoint(eager=eager)
     if mode == "reliable":
         if df.sparkSession.sparkContext.getCheckpointDir() is None:
             raise ValueError(
@@ -219,9 +223,10 @@ class ReliableCheckpointSweeper:
             pass
         return None
 
-    def cut(self, df: DataFrame, mode, slot: "str | None" = None) -> DataFrame:
+    def cut(self, df: DataFrame, mode, slot: "str | None" = None,
+            eager: bool = True) -> DataFrame:
         if mode != "reliable" or slot is None:
-            return cut_corpus_lineage(df, mode)
+            return cut_corpus_lineage(df, mode, eager)
         before = self._rdd_dirs()
         out = cut_corpus_lineage(df, mode)
         exact = self._checkpoint_file(out)
@@ -233,6 +238,11 @@ class ReliableCheckpointSweeper:
             self._pending.extend(self._slots.get(slot, ()))
             self._slots[slot] = created
         return out
+
+    def retire(self, slot: str) -> None:
+        """Queue ``slot``'s live generation for the next sweep, once
+        everything that reads it has been cut in turn."""
+        self._pending.extend(self._slots.pop(slot, ()))
 
     def sweep(self) -> None:
         """Best-effort: a failed delete (transient object-store error,
@@ -251,6 +261,17 @@ class ReliableCheckpointSweeper:
             except Exception:  # noqa: BLE001 — hygiene, not correctness
                 retry.append(uri)
         self._pending[:] = retry
+
+
+def drop_cut(df: "DataFrame | None") -> None:
+    """Free the blocks under a local/reliable cut now, not at driver GC
+    (a checkpointed Dataset's analyzed plan is the LogicalRDD over the
+    cut RDD); an uncut frame passes untouched."""
+    if df is None:
+        return
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def release(handles: list[DataFrame]) -> None:

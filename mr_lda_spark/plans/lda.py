@@ -5,23 +5,23 @@ polylingual corpora and for either placement of β.
 One EM iteration in the reference is one MapReduce job: an E-step map
 phase (per-doc coordinate ascent on φ/γ, DocumentMapper.java:184-259),
 a combiner/reducer M-step (log-space φ aggregation into β,
-TermCombiner.java / TermReducer.java), and a driver-side Newton–Raphson
-α update (VariationalInference.java:409-511).  Here there is one loop
-(``train``) and one E-step (``_estep_kernel`` around
-``numpy_sweep_backend``) for every mode:
+TermCombiner.java / TermReducer.java) with the ELBO and α statistics
+as job counters, and a driver-side Newton–Raphson α update
+(VariationalInference.java:409-511).  Here one loop (``train``) runs
+one E-step (``_estep_kernel`` around ``numpy_sweep_backend``) ONCE
+per iteration, for every mode:
 
-- E-step: ``mapInPandas`` over doc rows.  The kernel pads each Arrow
-  batch to ``(B, n_max, K)``, runs the sweeps, and emits γ/ll doc rows,
-  per-partition φ partials and one per-partition stats row (ELBO,
-  documents, tokens, α sufficient statistic — the reference's counters,
-  A6/A7).  γ is carried between iterations as a small (doc_id, gamma)
-  table joined back onto the E-step rows.
-- M-step: the φ partials combine by a plain sum, λ = η + Σ c·φ, and
-  E[log β] = ψ(λ) − ψ(Σ_v λ) per (language, topic).  The reference
-  sums in log space (``LogMath.add``) because its E-step did; the
-  sweep here is linear, and linear sums are exact for λ: η ≥ 1e-12,
-  so φ mass small enough to underflow cannot change η + Σ c·φ (log
-  space drops it too: logaddexp(log η, −700) == log η).
+- E-step: ``mapInPandas`` over the corpus cut's own partitions.  The
+  kernel pads each Arrow batch to ``(B, n_max, K)``, runs the sweeps,
+  and emits γ/ll doc rows, per-partition φ partials and one stats row
+  (the reference's counters, A6/A7).  Its output is cut lazily: the
+  M-step's job runs it, and the next iteration reads γ from the cut.
+- M-step: one shuffle sums the φ partials per term id, the stats row
+  riding along, and each reducer maps λ = η + Σ c·φ to ψ(λ); the
+  normalizer ψ(Σ_v λ) is the stats row's Σ c·φ per (language, topic)
+  plus the η mass.  The reference sums in log space (``LogMath.add``)
+  because its E-step did; linear sums are exact for λ: η ≥ 1e-12, so
+  φ mass small enough to underflow cannot change η + Σ c·φ.
 
 **Polylingual is mono over offset term ids.**  Every (lang, term_id)
 maps to one int id ``term_id + offset[lang]``, ``offset[l] =
@@ -37,12 +37,12 @@ polylda/DocumentMapper.java:31-32).  Mono is L=1 with offset 0.
 
 - ``"broadcast"``: E[log β] is a driver matrix broadcast each iteration
   (the reference's DistributedCache β, J3); the kernel gathers it per
-  token, and the driver finishes the M-step on the model-sized matrix.
-- ``"join"``: β is a (term_id, beta[K]) relation that never touches the
+  token.  Jobs per iteration: γ broadcast, E-step, φ pull (3).
+- ``"join"``: β is a (term_id, ψ(λ)) relation that never touches the
   driver inside the loop — the scale path once V×K outgrows executor
   memory (SURVEY.md §7.3).  The corpus joins β on term_id and regroups
-  by document, so each row carries its tokens' β slices, and the M-step
-  is relational.
+  by document, so each row carries its tokens' β slices.  Jobs per
+  iteration: β broadcast, doc regroup, E-step, stats pull (4).
 """
 
 from __future__ import annotations
@@ -55,32 +55,26 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mr_lda_spark.functions.alpha import update_alpha_scalar, update_alpha_vector
 from mr_lda_spark.functions.special import digamma, gammaln
+from mr_lda_spark.operators.informed_prior import LOG_ETA_OTHER, LOG_ETA_SEED
 from mr_lda_spark.operators.lifecycle import (
     ReliableCheckpointSweeper,
     cut_corpus_lineage,
+    drop_cut,
 )
 
 DEFAULT_ETA = 1e-12  # Settings.java:58
 DEFAULT_LOG_ETA = math.log(DEFAULT_ETA)
+# Informed prior (InformedPrior.java:43-44): seeds at 1000, the rest 0.001.
+_ETA_SEED, _ETA_OTHER = float(np.exp(LOG_ETA_SEED)), float(np.exp(LOG_ETA_OTHER))
 
 # E-step output: 'doc' rows (id = doc_id, vec = γ, ll = doc ELBO),
-# 'phi' rows (id = term id, vec = the partition's Σ c·φ — a linear
-# sum: λ = η + Σ c·φ with η ≥ 1e-12 absorbs any mass the linear form
-# loses to underflow) and one 'stats' row per partition (vec =
-# _STATS layout below).
-_ESTEP_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("id", T.LongType()),
-        T.StructField("vec", T.ArrayType(T.DoubleType())),
-        T.StructField("ll", T.DoubleType()),
-    ]
-)
-# stats vec = [ELBO, documents, tokens, α sufficient statistic (K)]
+# 'phi' rows (id = term id, vec = the partition's Σ c·φ) and one
+# 'stats' row per partition (id = -1, vec = [ELBO, documents, tokens,
+# α sufficient statistic (K), Σ c·φ per (language, topic) (L×K)]).
+_ESTEP_SCHEMA = "kind string, id long, vec array<double>, ll double"
 _STATS_HEAD = 3
 
 # φ accumulator flush bound (terms per partition before a partial is
@@ -151,13 +145,10 @@ def lang_term_id(lang, term_id, num_terms):
     return term_id + F.element_at(F.array(*map(F.lit, offsets)), lang + 1)
 
 
-def _lang_of(term_id, num_terms):
+def _lang_index(ids: np.ndarray, offsets) -> np.ndarray:
     """Inverse of ``lang_term_id`` on the language: how many block
-    starts past the first lie at or below the id."""
-    lang = F.lit(0)
-    for o in term_offsets(num_terms)[1:]:
-        lang = lang + (term_id >= o).cast("int")
-    return lang
+    starts past the first lie at or below each id."""
+    return np.searchsorted(np.asarray(offsets[1:], dtype=np.int64), ids, side="right")
 
 
 def unified_corpus(corpus: DataFrame, num_terms) -> DataFrame:
@@ -332,11 +323,9 @@ def _converged(gamma, prev_gamma, gamma_tol: float) -> bool:
 
 
 class _PhiSums:
-    """The E-step's in-mapper combine (A3): the partition's Σ c·φ per
-    term id as one sorted (ids, sums) pair, merged batch by batch and
-    emitted as a partial whenever it passes ``_PHI_FLUSH`` terms (sums
-    of partials are associative, so the combine downstream is
-    unchanged)."""
+    """Σ c·φ per term id as one sorted (ids, sums) pair, merged batch by
+    batch: the E-step's in-mapper combine (A3), emitted as a partial
+    past ``_PHI_FLUSH`` terms, and the M-step reducers' sum."""
 
     def __init__(self, K: int):
         self.ids = np.empty(0, dtype=np.int64)
@@ -363,14 +352,17 @@ def _estep_kernel(
     gamma_tol: float = 0.0,
     sweep_backend=None,
     elog_beta=None,
+    offsets=(0,),
+    beta_norm=None,
 ):
     """Build the mapInPandas function for one E-step pass.
 
     Input rows: (doc_id, term_ids, term_counts, gamma) plus, when
     ``elog_beta`` is None (join placement), ``betas`` — each token's β
-    slice.  Otherwise ``elog_beta`` is the stacked matrix or a
-    ``sparkContext.broadcast`` of it (one torrent copy per executor
-    instead of a per-task closure pickle), gathered per token.
+    slice, less ``beta_norm[lang]`` when given.  Otherwise ``elog_beta``
+    is the stacked matrix or a ``sparkContext.broadcast`` of it (one
+    torrent copy per executor instead of a per-task closure pickle),
+    gathered per token.  ``offsets``: the ``term_offsets`` block starts.
     ``learning=False`` is the reference's -test mode
     (VariationalInferenceOptions.java:166-178): no φ rows.
 
@@ -380,7 +372,7 @@ def _estep_kernel(
         logφ_w = E[log β_w] + ψ(γ), normalized;  γ = α + Σ_w c_w φ_w
       doc ELBO = L_α + Σ lnΓ(γ) − lnΓ(Σγ) + Σ_w c_w φ_w (E[log β_w] − logφ_w)
     """
-    K = len(alpha)
+    K, L = len(alpha), len(offsets)
     l_alpha = float(gammaln(alpha.sum()) - gammaln(alpha).sum())
     # Looked up here, at kernel build, so a swapped module attribute
     # (a timing wrapper) reaches every mode.
@@ -389,14 +381,13 @@ def _estep_kernel(
     def run(batches):
         eb = elog_beta.value if hasattr(elog_beta, "value") else elog_beta
         phi_acc = _PhiSums(K)
-        stats = np.zeros(_STATS_HEAD + K)
+        stats = np.zeros(_STATS_HEAD + K + L * K)
+        lang_sums = stats[_STATS_HEAD + K :].reshape(L, K)  # a view
         seen_any = False
 
         def phi_frames(final):
             for ids, vecs in phi_acc.drain(final):
-                yield pd.DataFrame(
-                    {"kind": "phi", "id": ids, "vec": list(vecs), "ll": None}
-                )
+                yield pd.DataFrame({"kind": "phi", "id": ids, "vec": list(vecs), "ll": None})
 
         for pdf in batches:
             # Batch-vectorized E-step: pad every doc in the Arrow
@@ -416,6 +407,7 @@ def _estep_kernel(
             for j, i in enumerate(keep):
                 terms_pad[j, : lens[j]] = term_lists[i]
                 counts_pad[j, : lens[j]] = np.asarray(counts.iloc[i], dtype=np.float64)
+            lang = _lang_index(terms_pad, offsets)
             if eb is not None:
                 elb = eb[terms_pad]  # (B, n_max, K)
             else:
@@ -424,11 +416,14 @@ def _estep_kernel(
                     elb[j, : lens[j]] = np.asarray(
                         list(pdf["betas"].iloc[i]), dtype=np.float64
                     )
+                if beta_norm is not None:
+                    elb -= beta_norm[lang]
 
             n_tokens = counts_pad.sum(axis=1)  # (B,)
             gamma = np.tile(alpha, (B, 1)) + n_tokens[:, None] / K
+            carried = pdf["gamma"].tolist() if "gamma" in pdf else [None] * len(pdf)
             for j, i in enumerate(keep):
-                g = pdf["gamma"].iloc[i]
+                g = carried[i]
                 if g is not None and len(g) == K:
                     gamma[j] = np.asarray(g, dtype=np.float64)
 
@@ -440,159 +435,229 @@ def _estep_kernel(
             ll_gamma = gammaln(gamma).sum(axis=1) - gammaln(sum_gamma)
             doc_ll = l_alpha + ll_gamma + ll_phi
             stats[:_STATS_HEAD] += (doc_ll.sum(), B, n_tokens.sum())
-            stats[_STATS_HEAD:] += (
+            stats[_STATS_HEAD : _STATS_HEAD + K] += (
                 digamma(gamma) - digamma(sum_gamma)[:, None]
             ).sum(axis=0)
 
             # Doc rows carry ONLY gamma + ll — the static term arrays
             # never round-trip back through Arrow.
-            yield pd.DataFrame(
-                {
-                    "kind": "doc",
-                    "id": pdf["doc_id"].iloc[keep].astype("int64").values,
-                    "vec": list(gamma),
-                    "ll": doc_ll,
-                }
-            )
+            ids = pdf["doc_id"].iloc[keep].astype("int64").values
+            yield pd.DataFrame({"kind": "doc", "id": ids, "vec": list(gamma), "ll": doc_ll})
             if learning:
                 valid = counts_pad > 0
-                phi_acc.add(terms_pad[valid], counts_pad[valid][:, None] * phi[valid])
+                cphi = counts_pad[valid][:, None] * phi[valid]
+                lang_sums += np.eye(L)[lang[valid]].T @ cphi
+                phi_acc.add(terms_pad[valid], cphi)
                 yield from phi_frames(final=False)
 
         if not seen_any:
             return
         if learning:
             yield from phi_frames(final=True)
-        yield pd.DataFrame(
-            {"kind": ["stats"], "id": [-1], "vec": [stats], "ll": [None]}
-        )
+        yield pd.DataFrame({"kind": ["stats"], "id": [-1], "vec": [stats], "ll": [None]})
 
     return run
 
 
-def _estep(rows, gamma_df, alpha, elog_beta, max_gamma_iter, learning,
-           gamma_tol, sweep_backend) -> DataFrame:
-    """Warm-start γ onto the E-step rows, then run the kernel."""
-    if gamma_df is not None:
-        rows = rows.join(gamma_df, "doc_id", "left")
-    elif "gamma" not in rows.columns:
-        rows = rows.withColumn("gamma", F.lit(None).cast("array<double>"))
-    kernel = _estep_kernel(
-        alpha, max_gamma_iter, learning, gamma_tol, sweep_backend, elog_beta
-    )
+def _estep(rows, alpha, elog_beta, max_gamma_iter, learning, gamma_tol,
+           sweep_backend, offsets=(0,), beta_norm=None) -> DataFrame:
+    """Run the kernel over doc rows (a missing γ column cold-starts)."""
+    kernel = _estep_kernel(alpha, max_gamma_iter, learning, gamma_tol,
+                           sweep_backend, elog_beta, offsets, beta_norm)
     return rows.mapInPandas(kernel, schema=_ESTEP_SCHEMA)
 
 
-def _combine_phi(out: DataFrame) -> DataFrame:
-    """(term_id, topic, phi): the partition φ partials summed in ONE
-    shuffle, whose partial aggregate plays the reference's TermCombiner.
-    Linear sums suffice where the reference folds ``LogMath.add``
-    (TermCombiner.java:30): λ = η + Σ c·φ with η ≥ 1e-12, so mass the
-    linear form loses to underflow is too small to change λ."""
+def _combine_phi(out: DataFrame, K: int, n_parts: int, post=None) -> DataFrame:
+    """(id, vec): the φ partials summed per term id in ONE shuffle to
+    ``n_parts`` reducers (TermCombiner/TermReducer), the stats rows
+    summed under id -1 on the way; ``post(ids, sums)`` maps a reducer's
+    sums before they leave it."""
+
+    def run(batches):
+        acc, stats = _PhiSums(K), []
+        for pdf in batches:
+            st = (pdf["id"] < 0).to_numpy()
+            stats += list(pdf["vec"][st])
+            if not st.all():
+                acc.add(pdf["id"][~st].to_numpy(), np.stack(pdf["vec"][~st].to_numpy()))
+        for ids, sums in acc.drain(final=True):
+            yield pd.DataFrame({"id": ids, "vec": list(sums if post is None else post(ids, sums))})
+        if stats:
+            yield pd.DataFrame({"id": [-1], "vec": [np.sum(stats, axis=0)]})
+
     return (
-        out.filter(F.col("kind") == "phi")
-        .select(
-            F.col("id").cast("int").alias("term_id"),
-            F.posexplode("vec").alias("topic", "v"),
-        )
-        .groupBy("term_id", "topic")
-        .agg(F.sum("v").alias("phi"))
+        out.filter(F.col("kind") != "doc")
+        .select("id", "vec")
+        .repartition(n_parts, "id")
+        .mapInPandas(run, schema="id long, vec array<double>")
     )
 
 
-def _pull_stats(out: DataFrame, K: int):
-    """The one α/ELBO pull of an iteration: sum the per-partition stats
-    rows.  Returns (elbo, documents, tokens, α sufficient statistic)."""
-    rows = out.filter(F.col("kind") == "stats").select("vec").collect()
-    total = np.zeros(_STATS_HEAD + K)
-    for r in rows:
-        total += np.asarray(r["vec"])
-    return float(total[0]), int(total[1]), float(total[2]), total[_STATS_HEAD:]
+def _split_combined(pdf: pd.DataFrame, K: int, L: int):
+    """Combined rows → (term ids, (n, K) vecs, (elbo, documents, tokens,
+    α statistic, (L, K) Σ c·φ)); zero stats when no token was seen."""
+    is_stats = (pdf["id"] < 0).to_numpy()
+    v = np.zeros(_STATS_HEAD + K + L * K)
+    if is_stats.any():
+        v = np.asarray(pdf["vec"][is_stats].iloc[0], dtype=np.float64)
+    terms = pdf[~is_stats]
+    vecs = np.stack(terms["vec"].to_numpy()) if len(terms) else np.zeros((0, K))
+    stats = (float(v[0]), int(v[1]), float(v[2]), v[_STATS_HEAD : _STATS_HEAD + K],
+             v[_STATS_HEAD + K :].reshape(L, K))
+    return terms["id"].to_numpy(), vecs, stats
 
 
-def _mstep_beta(phi: np.ndarray, eta: np.ndarray | None) -> np.ndarray:
-    """M-step finalization for one language block
-    (TermReducer.java:157-235): λ = η + Σ c·φ, then
-    E[log β] = ψ(λ) − ψ(Σ_v λ).  Row 0 is the reserved index."""
-    lam = phi[1:] + (DEFAULT_ETA if eta is None else eta[1:])
-    elog = np.full(phi.shape, DEFAULT_LOG_ETA)
-    elog[1:] = digamma(lam) - digamma(lam.sum(axis=0))[None, :]
-    return elog
+def _prior(eta_seeds, num_terms, K: int):
+    """η as (base, seed term ids, seed topics): 1e-12 everywhere, or the
+    informed prior's 0.001 with each in-range seed (topic, term_id) at
+    1000 (InformedPrior.java:43-44); a seed list is small."""
+    none = np.zeros(0, dtype=np.int64)
+    if eta_seeds is None:
+        return DEFAULT_ETA, none, none
+    offsets = term_offsets(num_terms)
+    rows = offsets[-1] + num_terms[-1] + 1
+    pairs = {(r["term_id"], r["topic"]) for r in eta_seeds.select("term_id", "topic").collect()}
+    pairs = sorted((v, k) for v, k in pairs if 0 < v < rows and v not in offsets and 0 <= k < K)
+    tv, tk = np.array(pairs, dtype=np.int64).reshape(-1, 2).T
+    return _ETA_OTHER, tv, tk
 
 
-class _BroadcastBeta:
-    """β as one driver matrix, broadcast (torrent, one copy per
-    executor) to every E-step.  The corpus is cut ONCE as doc rows
-    partitioned by doc_id and never re-materialized; each iteration
-    joins only the small γ table back onto it."""
+def _eta(prior, ids: np.ndarray, K: int) -> np.ndarray:
+    """Dense η rows for the sorted stacked ``ids``."""
+    base, tv, tk = prior
+    eta = np.full((ids.size, K), base)
+    if ids.size and tv.size:
+        pos = np.minimum(np.searchsorted(ids, tv), ids.size - 1)
+        hit = ids[pos] == tv
+        eta[pos[hit], tk[hit]] = _ETA_SEED
+    return eta
 
-    def __init__(self, spark, state, ckpt_gc, checkpoint, eta_seeds,
-                 truncate_beta, n_parts):
-        self.spark, self.state, self.checkpoint = spark, state, checkpoint
-        self.truncate_beta, self.n_parts = truncate_beta, n_parts
-        self.eta = None
-        if eta_seeds is not None:
-            from mr_lda_spark.operators.informed_prior import eta_from_rows
 
-            # Dense (rows, K) prior over the stacked ids (block starts
-            # included; _mstep_beta never reads them).
-            rows = state.elog_beta.shape[0]
-            self.eta = np.exp(eta_from_rows(eta_seeds, rows - 1, len(state.alpha)))
+def _psi_lambda(prior, K: int):
+    """The reducers' map ψ(λ) = ψ(η + Σ c·φ); the normalizer ψ(Σ_v λ)
+    needs a whole language, so the driver forms it from the stats."""
+    return lambda ids, sums: digamma(sums + _eta(prior, ids, K))
 
-    def load(self, corpus: DataFrame):
-        doc = _doc_form(corpus)
-        has_gamma = "gamma" in doc.columns
-        cols = ["doc_id", "term_ids", "term_counts"] + (["gamma"] if has_gamma else [])
-        base = cut_corpus_lineage(  # the ONE materialization of the input
-            doc.select(*cols).repartition(self.n_parts, "doc_id"),
-            self.checkpoint,
-        )
-        self.rows = base.select("doc_id", "term_ids", "term_counts")
-        return base.select("doc_id", "gamma") if has_gamma else None
 
-    def estep_rows(self):
-        self._bc = self.spark.sparkContext.broadcast(self.state.elog_beta)
-        return self.rows, self._bc
+def _assemble(shape, num_terms, prior, norm, ids, psi_lam) -> np.ndarray:
+    """Stacked E[log β] = ψ(λ) − ψ(Σ_v λ) (TermReducer.java:157-235) from
+    ψ(λ) rows ``ids`` and the (L, K) ``norm``; unseen terms hold λ = η,
+    block starts the floor."""
+    offsets = term_offsets(num_terms)
+    rest = np.setdiff1d(np.arange(shape[0]), np.concatenate([offsets, ids]))
+    mat = np.full(shape, DEFAULT_LOG_ETA)
+    mat[rest] = digamma(_eta(prior, rest, shape[1])) - norm[_lang_index(rest, offsets)]
+    mat[ids] = psi_lam - norm[_lang_index(ids, offsets)]
+    return mat
 
-    def mstep(self, out: DataFrame) -> None:
-        state = self.state
-        phi = np.zeros(state.elog_beta.shape)
-        pdf = _combine_phi(out).toPandas()  # ~V×K rows: one Arrow pull
-        phi[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["phi"].to_numpy()
-        elog = np.empty_like(phi)
-        for o, v in zip(term_offsets(state.num_terms), state.num_terms):
-            blk = slice(o, o + v + 1)
-            eb = _mstep_beta(phi[blk], None if self.eta is None else self.eta[blk])
-            n = self.truncate_beta
-            if n is not None and n < v:
-                # The reference designed (then disabled) approximate
-                # top-k β to shrink the per-mapper model
-                # (TermReducer.java:34-38, -truncatebeta): keep each
-                # topic's top-N terms, floor the tail.
-                kth = np.partition(eb[1:], -n, axis=0)[-n]
-                eb[1:] = np.where(eb[1:] >= kth[None, :], eb[1:], DEFAULT_LOG_ETA)
-            elog[blk] = eb
-        state.elog_beta = elog
 
-    def release(self) -> None:
-        self._bc.unpersist()
+def _fits_broadcast(spark: SparkSession, n_rows: int, K: int) -> bool:
+    """Whether ``n_rows`` (id, vec[K]) rows fit the broadcast threshold.
+    The loop knows the size; a cut's plan estimate multiplies upstream
+    join sizes, so the corpus side would be shuffled before AQE."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= n_rows * (K + 4) * 8 <= limit
+
+
+class _Placement:
+    """Shared by both β placements: settings, η mass, the corpus cut."""
+
+    def __init__(self, spark, state, ckpt_gc, checkpoint, prior, n_parts):
+        self.spark, self.state, self.ckpt_gc = spark, state, ckpt_gc
+        self.checkpoint, self.prior, self.n_parts = checkpoint, prior, n_parts
+        self.K, self.L = len(state.alpha), len(state.num_terms)
+        base, tv, tk = prior  # Σ_v η per (language, topic)
+        self.eta_mass = np.outer(state.num_terms, np.full(self.K, base))
+        lang = _lang_index(tv, term_offsets(state.num_terms))
+        np.add.at(self.eta_mass, (lang, tk), _ETA_SEED - base)
+        self.base = None
+
+    def combine(self, out: DataFrame) -> DataFrame:
+        """The φ combine, each reducer mapping its sums to ψ(λ)."""
+        return _combine_phi(out, self.K, self.n_parts, _psi_lambda(self.prior, self.K))
+
+    def close(self) -> None:
+        drop_cut(self.base)
 
     def finish(self) -> np.ndarray:
         return self.state.elog_beta
 
 
-def _join_rows(tall: DataFrame, beta: DataFrame, K: int) -> DataFrame:
-    """Doc rows carrying their tokens' β slices: corpus ⋈ β on term_id,
-    regrouped by doc_id.  Terms absent from β score at the η floor."""
-    floor = F.array_repeat(F.lit(float(DEFAULT_LOG_ETA)), K)
-    return (
-        tall.join(beta, "term_id", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list("term_id").alias("term_ids"),
-            F.collect_list("term_count").alias("term_counts"),
-            F.collect_list(F.coalesce("beta", floor)).alias("betas"),
+class _BroadcastBeta(_Placement):
+    """β as one driver matrix, broadcast (torrent, one copy per
+    executor) to every E-step.  The corpus is cut ONCE as doc rows
+    partitioned by doc_id and never re-materialized; each iteration
+    joins only the last E-step's γ back onto it — broadcast while
+    D×K fits the session threshold, so the corpus side never moves."""
+
+    def __init__(self, *args, truncate_beta=None):
+        super().__init__(*args)
+        self.truncate_beta, self._bc, self.num_docs = truncate_beta, None, 0
+
+    def load(self, corpus: DataFrame) -> None:
+        doc = _doc_form(corpus)
+        cols = ["doc_id", "term_ids", "term_counts"]
+        cols += ["gamma"] if "gamma" in doc.columns else []
+        self.base = cut_corpus_lineage(  # the ONE materialization of the input
+            doc.select(*cols).repartition(self.n_parts, "doc_id"),
+            self.checkpoint,
         )
+
+    def estep_rows(self, gamma):
+        rows = self.base
+        if gamma is not None:
+            if _fits_broadcast(self.spark, self.num_docs, self.K):
+                gamma = F.broadcast(gamma)
+            rows = rows.drop("gamma").join(gamma, "doc_id", "left")
+        self._bc = self.spark.sparkContext.broadcast(self.state.elog_beta)
+        return rows, self._bc, None
+
+    def mstep(self, out: DataFrame):
+        state = self.state
+        # ~V rows of ψ(λ) plus the stats row: one Arrow pull.
+        ids, psi_lam, stats = _split_combined(self.combine(out).toPandas(), self.K, self.L)
+        self._bc.unpersist()  # the E-step has run
+        self.num_docs = stats[1]
+        norm = digamma(self.eta_mass + stats[4])
+        elog = _assemble(state.elog_beta.shape, state.num_terms, self.prior, norm, ids, psi_lam)
+        n = self.truncate_beta
+        for o, v in zip(term_offsets(state.num_terms), state.num_terms):
+            if n is not None and n < v:
+                # The reference's designed (then disabled) -truncatebeta
+                # (TermReducer.java:34-38): keep each topic's top N.
+                eb = elog[o + 1 : o + v + 1]
+                kth = np.partition(eb, -n, axis=0)[-n]
+                eb[eb < kth[None, :]] = DEFAULT_LOG_ETA
+        state.elog_beta = elog
+        return stats
+
+    def close(self) -> None:
+        super().close()
+        if self._bc is not None:
+            self._bc.unpersist()
+
+
+def _join_rows(tall: DataFrame, beta: DataFrame, K: int, gamma=None,
+               n_parts=None) -> DataFrame:
+    """Doc rows carrying their tokens' β slices: corpus ⋈ β on term_id,
+    regrouped by doc_id (into ``n_parts`` partitions when given).
+    ``gamma`` (doc_id, gamma) rows ride the same regroup.  Terms absent
+    from β score at the η floor."""
+    floor = F.array_repeat(F.lit(float(DEFAULT_LOG_ETA)), K)
+    tokens = tall.join(beta, "term_id", "left").select(
+        "doc_id", "term_id", "term_count", F.coalesce("beta", floor).alias("beta")
+    )
+    carried = []
+    if gamma is not None:
+        tokens = tokens.unionByName(gamma, allowMissingColumns=True)
+        carried = [F.first("gamma", ignorenulls=True).alias("gamma")]
+    if n_parts is not None:
+        tokens = tokens.repartition(n_parts, "doc_id")
+    return tokens.groupBy("doc_id").agg(
+        F.collect_list("term_id").alias("term_ids"),
+        F.collect_list("term_count").alias("term_counts"),
+        F.collect_list("beta").alias("betas"),
+        *carried,
     )
 
 
@@ -605,118 +670,62 @@ def _matrix_relation(spark: SparkSession, elog_beta: np.ndarray, num_terms) -> D
     return spark.createDataFrame(rows, schema="term_id int, beta array<double>")
 
 
-class _JoinBeta:
-    """β as a (term_id, beta[K]) relation that never reaches the driver
-    inside the loop.  The corpus is cut ONCE as tall rows partitioned by
-    term_id, so every iteration's β join reuses that partitioning.
-    Cost vs broadcast: two corpus-sized shuffles per iteration (the β
-    join and the regroup) — the honest price when V×K ∉ executor
-    memory."""
+class _JoinBeta(_Placement):
+    """β as a (term_id, ψ(λ)) relation that never reaches the driver in
+    the loop: the reducers' lazily cut output, normalized by an L×K
+    driver constant the next E-step subtracts.  The corpus is cut ONCE
+    as tall rows; each E-step joins β onto it (broadcast while V×K fits
+    the threshold, so the cut never moves) and regroups by doc_id into
+    ``n_parts`` partitions with the previous γ riding along: the one
+    corpus-sized shuffle per iteration."""
 
-    def __init__(self, spark, state, ckpt_gc, checkpoint, eta_seeds,
-                 truncate_beta, n_parts):
+    def __init__(self, *args, truncate_beta=None):
         if truncate_beta is not None:
             raise ValueError("truncate_beta needs beta_mode='broadcast'")
-        self.spark, self.state, self.ckpt_gc = spark, state, ckpt_gc
-        self.checkpoint, self.n_parts, self.eta_seeds = checkpoint, n_parts, eta_seeds
-        self.digamma = F.pandas_udf(
-            lambda s: pd.Series(digamma(s.to_numpy())), "double"
-        )
+        super().__init__(*args)
+        self.norm = self.sums = None  # ψ(Σ_v λ) (L, K); β's cut
 
-    def load(self, corpus: DataFrame):
-        spark, state, K = self.spark, self.state, len(self.state.alpha)
-        self.tall = cut_corpus_lineage(
+    def load(self, corpus: DataFrame) -> None:
+        self.base = cut_corpus_lineage(
             _tall_form(corpus).repartition(self.n_parts, "term_id"),
             self.checkpoint,
         )
-        self.beta = self.ckpt_gc.cut(
-            _matrix_relation(spark, state.elog_beta, state.num_terms)
-            .repartition(self.n_parts, "term_id"),
-            self.checkpoint,
-            slot="beta",
-        )
-        self.eta = None
-        if self.eta_seeds is not None:
-            from mr_lda_spark.operators.informed_prior import (
-                LOG_ETA_OTHER,
-                LOG_ETA_SEED,
-            )
+        self.beta = _matrix_relation(self.spark, self.state.elog_beta, self.state.num_terms)
+        self.gamma0 = corpus.select("doc_id", "gamma") if "gamma" in corpus.columns else None
 
-            # Dense distributed η (InformedPrior.java:43-44): every
-            # (term, topic) gets its prior, because non-seed terms'
-            # 0.001 mass is NOT negligible in the per-topic normalizer
-            # — exactly the broadcast M-step's dense matrix, kept as a
-            # DataFrame built with spark.range, never on the driver.
-            offsets = term_offsets(state.num_terms)
-            seeds = (
-                self.eta_seeds.select("topic", "term_id").distinct()
-                .withColumn("seed", F.lit(True))
-            )
-            self.eta = cut_corpus_lineage(
-                spark.range(state.elog_beta.shape[0])
-                .filter(~F.col("id").isin(offsets))
-                .select(F.col("id").cast("int").alias("term_id"))
-                .crossJoin(spark.range(K).select(F.col("id").cast("int").alias("topic")))
-                .join(F.broadcast(seeds), ["topic", "term_id"], "left")
-                .select(
-                    "term_id",
-                    "topic",
-                    F.when(F.col("seed"), F.lit(float(np.exp(LOG_ETA_SEED))))
-                    .otherwise(F.lit(float(np.exp(LOG_ETA_OTHER))))
-                    .alias("eta"),
-                ),
-                self.checkpoint,
-            )
-        if "gamma" not in corpus.columns:
-            return None
-        return self.ckpt_gc.cut(
-            corpus.select("doc_id", "gamma"), self.checkpoint, slot="gamma"
+    def estep_rows(self, gamma):
+        beta = self.beta
+        if _fits_broadcast(self.spark, sum(self.state.num_terms), self.K):
+            beta = F.broadcast(beta)
+        rows = _join_rows(
+            self.base, beta, self.K, self.gamma0 if gamma is None else gamma, self.n_parts
         )
+        return rows, None, self.norm
 
-    def estep_rows(self):
-        return _join_rows(self.tall, self.beta, len(self.state.alpha)), None
-
-    def mstep(self, out: DataFrame) -> None:
-        phi = _combine_phi(out)
-        if self.eta is None:
-            # Uninformed η = 1e-12: the unobserved-term mass is
-            # negligible in the normalizer, so the sparse
-            # (observed-terms-only) relation suffices.
-            lam = phi.select("term_id", "topic", (F.col("phi") + DEFAULT_ETA).alias("lam"))
-        else:
-            lam = self.eta.join(phi, ["term_id", "topic"], "left").select(
-                "term_id", "topic",
-                (F.col("eta") + F.coalesce("phi", F.lit(0.0))).alias("lam"),
-            )
-        # β is a distribution per language per topic: the normalizer
-        # groups by (lang, topic), L×K scalars, always broadcastable.
-        lam = lam.withColumn("lang", _lang_of(F.col("term_id"), self.state.num_terms))
-        norms = lam.groupBy("lang", "topic").agg(F.sum("lam").alias("norm"))
-        beta = (
-            lam.join(F.broadcast(norms), ["lang", "topic"])
-            .select(
-                "term_id",
-                "topic",
-                (self.digamma(F.col("lam")) - self.digamma(F.col("norm"))).alias("elog"),
-            )
-            .groupBy("term_id")
-            .agg(F.array_sort(F.collect_list(F.struct("topic", "elog"))).alias("p"))
-            .select("term_id", F.col("p.elog").alias("beta"))
+    def mstep(self, out: DataFrame):
+        sums = self.ckpt_gc.cut(self.combine(out), self.checkpoint, slot="beta", eager=False)
+        # Materializes the cut: the one job after the E-step's.
+        _, _, stats = _split_combined(sums.filter(F.col("id") < 0).toPandas(), self.K, self.L)
+        drop_cut(self.sums)  # the previous β: this E-step has read it
+        self.sums = sums
+        self.beta = sums.filter(F.col("id") >= 0).select(
+            F.col("id").cast("int").alias("term_id"), F.col("vec").alias("beta")
         )
-        self.beta = self.ckpt_gc.cut(
-            beta.repartition(self.n_parts, "term_id"), self.checkpoint, slot="beta"
-        )
+        self.norm = digamma(self.eta_mass + stats[4])
+        return stats
 
-    def release(self) -> None:
-        pass
+    def close(self) -> None:
+        super().close()
+        drop_cut(self.sums)
 
     def finish(self) -> np.ndarray:
         # API parity: expose β as the stacked matrix (a model-sized
         # pull; the loop never needed it on the driver).
-        mat = np.full(self.state.elog_beta.shape, DEFAULT_LOG_ETA)
-        for r in self.beta.collect():
-            mat[r["term_id"]] = np.asarray(r["beta"])
-        return mat
+        state = self.state
+        if self.norm is None:
+            return state.elog_beta
+        ids, psi_lam, _ = _split_combined(self.sums.toPandas(), self.K, self.L)
+        return _assemble(state.elog_beta.shape, state.num_terms, self.prior, self.norm, ids, psi_lam)
 
 
 def train(
@@ -750,20 +759,18 @@ def train(
     -modelindex); ``random_start_gamma`` ignores it.
 
     ``beta_mode`` places β: "broadcast" (driver matrix) or "join"
-    (distributed relation, ``shuffle_partitions`` wide).  ``eta_seeds``
-    is the informed-prior seed relation (topic, term_id) —
-    ``informed_prior.parse_informed_prior``'s output: seeds smooth at
-    log 1000, everything else at log 0.001 (InformedPrior.java:43-44).
-    ``truncate_beta`` keeps each topic's top-N terms (broadcast only).
-
-    ``estep_backend`` swaps the per-batch sweep kernel (see
-    ``numpy_sweep_backend`` for the contract) in either placement.
+    (distributed relation); every E-step runs on ``shuffle_partitions``
+    partitions (default: the session's parallelism).  ``eta_seeds`` is
+    the informed-prior seed relation (topic, term_id) of
+    ``informed_prior.parse_informed_prior``.  ``truncate_beta`` keeps
+    each topic's top-N terms (broadcast only).  ``estep_backend`` swaps
+    the sweep kernel (contract: ``numpy_sweep_backend``).
 
     ``corpus_checkpoint`` selects the lineage-cut tier ("local" default
     / "reliable" for preemptible clusters —
-    ``operators/lifecycle.cut_corpus_lineage``) for the one-time corpus
-    cut and the per-iteration γ/β cuts: a lost block of any of them
-    kills a mid-flight training run equally.
+    ``operators/lifecycle.cut_corpus_lineage``) of the corpus cut and
+    the per-iteration E-step/β cuts, all freed on return, failure
+    included; only the returned γ's own cut outlives the call.
     """
     from mr_lda_spark.session import ensure_package_shipped
 
@@ -785,96 +792,94 @@ def train(
         num_terms=vocab,
     )
 
-    # Reliable mode: superseded per-iteration γ/β checkpoints are
-    # deleted at the next loop top (never at supersede time — the
-    # persisted E-step output may still re-read them on eviction),
-    # bounding checkpoint-store disk at the live generation.
+    # Reliable mode: superseded per-iteration E-step/β checkpoints are
+    # deleted at the next loop top (never at supersede time — a task
+    # retry of the running iteration may still re-read them), bounding
+    # checkpoint-store disk at the live generation.
     ckpt_gc = ReliableCheckpointSweeper(spark)
     placement = {"broadcast": _BroadcastBeta, "join": _JoinBeta}[beta_mode](
-        spark, state, ckpt_gc, corpus_checkpoint, eta_seeds, truncate_beta,
+        spark, state, ckpt_gc, corpus_checkpoint, _prior(eta_seeds, vocab, K),
         shuffle_partitions or spark.sparkContext.defaultParallelism,
+        truncate_beta=truncate_beta,
     )
-    gamma_df = placement.load(unified_corpus(corpus, vocab))
-    if random_start_gamma:
-        gamma_df = None
+    corpus = unified_corpus(corpus, vocab)
+    if random_start_gamma and "gamma" in corpus.columns:
+        corpus = corpus.drop("gamma")
+    offsets = term_offsets(vocab)
 
     num_docs = 0
     prev_elbo = None
-    for it in range(max_iterations):
-        iter_t0 = time.perf_counter()
-        ckpt_gc.sweep()  # generation it-2 is unreachable now
-        rows, beta = placement.estep_rows()
-        out = _estep(
-            rows, gamma_df, state.alpha, beta, max_gamma_iter, True,
-            gamma_tol, estep_backend,
-        ).persist()
-        elbo, docs, tokens, alpha_ss = _pull_stats(out, K)
-        if it == 0:
-            # D and N as the E-step saw them: empty documents (P7) are
-            # in neither.
-            num_docs, state.total_tokens = docs, tokens
-            if tokens <= 0:
-                out.unpersist()
-                placement.release()
-                raise EmptyCorpusError("corpus has no tokens: every document is empty")
-        placement.mstep(out)
-        gamma_df = ckpt_gc.cut(  # D×K doubles; cuts lineage
-            out.filter(F.col("kind") == "doc").select(
+    gamma_df = None
+    live = []  # E-step cuts not yet freed; the last one backs gamma_df
+    try:
+        placement.load(corpus)
+        for it in range(max_iterations):
+            iter_t0 = time.perf_counter()
+            ckpt_gc.sweep()  # generation it-2 is unreachable now
+            rows, beta, beta_norm = placement.estep_rows(gamma_df)
+            live.append(ckpt_gc.cut(
+                _estep(rows, state.alpha, beta, max_gamma_iter, True,
+                       gamma_tol, estep_backend, offsets, beta_norm),
+                corpus_checkpoint, slot="estep", eager=False,
+            ))
+            # One pass: the M-step's job runs the E-step into the cut.
+            elbo, docs, tokens, alpha_ss, _ = placement.mstep(live[-1])
+            while len(live) > 1:  # the previous γ has been read
+                drop_cut(live.pop(0))
+            if it == 0:
+                # D and N as the E-step saw them: empty documents (P7)
+                # are in neither.
+                num_docs, state.total_tokens = docs, tokens
+                if tokens <= 0:
+                    raise EmptyCorpusError("corpus has no tokens: every document is empty")
+            gamma_df = live[-1].filter(F.col("kind") == "doc").select(
                 F.col("id").alias("doc_id"), F.col("vec").alias("gamma")
-            ),
-            corpus_checkpoint,
-            slot="gamma",
-        )
-        out.unpersist()
-        placement.release()
+            )
 
-        if symmetric_alpha:
-            # Keep α symmetric: the scalar update on the summed
-            # statistic, reference-style.
-            a = update_alpha_scalar(K, num_docs, float(state.alpha[0]), float(alpha_ss.sum()))
-            state.alpha = np.full(K, a)
-        else:
-            state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
-        state.elbo = elbo
-        state.history.append(elbo)
-        state.iter_seconds.append(round(time.perf_counter() - iter_t0, 3))
-        if state.total_tokens > 0:
-            # Per-token perplexity from the variational bound — the
-            # reference's LOG_LIKELIHOOD counter, normalized.
-            state.perplexity_history.append(math.exp(-elbo / state.total_tokens))
-        if snapshot_dir is not None:
-            _write_snapshot(snapshot_dir, it + 1, gamma_df, state)
-        if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
-            break
-        prev_elbo = elbo
+            if symmetric_alpha:
+                # Keep α symmetric: the scalar update on the summed
+                # statistic, reference-style.
+                a = update_alpha_scalar(K, num_docs, float(state.alpha[0]), float(alpha_ss.sum()))
+                state.alpha = np.full(K, a)
+            else:
+                state.alpha = update_alpha_vector(num_docs, state.alpha, alpha_ss)
+            state.elbo = elbo
+            state.history.append(elbo)
+            state.iter_seconds.append(round(time.perf_counter() - iter_t0, 3))
+            if state.total_tokens > 0:
+                # Per-token perplexity from the variational bound — the
+                # reference's LOG_LIKELIHOOD counter, normalized.
+                state.perplexity_history.append(math.exp(-elbo / state.total_tokens))
+            if snapshot_dir is not None:
+                _write_snapshot(snapshot_dir, it + 1, gamma_df, state)
+            if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
+                break
+            prev_elbo = elbo
 
-    ckpt_gc.sweep()  # last superseded generation; the live one backs
-    # the returned γ (and, in join mode, β)
-    state.elog_beta = placement.finish()
+        if live:  # D×K doubles, cut apart from the E-step's φ rows
+            gamma_df = ckpt_gc.cut(gamma_df, corpus_checkpoint, slot="gamma")
+            ckpt_gc.retire("estep")
+        ckpt_gc.sweep()  # superseded generations and the last E-step
+        state.elog_beta = placement.finish()
+    finally:
+        for df in live:
+            drop_cut(df)
+        placement.close()
     return gamma_df, state
 
 
 def _write_snapshot(out_dir: str, iteration: int, gamma_df: DataFrame, state: LdaState) -> None:
-    """Per-iteration snapshot set (the reference's alpha-<i> / beta-<i>
-    / gamma-<i> directories, VariationalInference.java:346-379): gamma
-    parquet + alpha/instrumentation JSON.  Beta is model-sized and
-    recoverable from state; written on demand via beta_dataframe."""
+    """Per-iteration snapshot (the reference's alpha-<i> / gamma-<i>,
+    VariationalInference.java:346-379): gamma parquet + alpha JSON;
+    β is written on demand via ``beta_dataframe``."""
     import json
     import os
 
-    gamma_df.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"gamma-{iteration}")
-    )
+    gamma_df.write.mode("overwrite").parquet(os.path.join(out_dir, f"gamma-{iteration}"))
     with open(os.path.join(out_dir, f"alpha-{iteration}.json"), "w") as fh:
-        json.dump(
-            {
-                "alpha": state.alpha.tolist(),
-                "elbo": state.elbo,
-                "iter_seconds": state.iter_seconds,
-                "perplexity": state.perplexity_history,
-            },
-            fh,
-        )
+        json.dump({"alpha": state.alpha.tolist(), "elbo": state.elbo,
+                   "iter_seconds": state.iter_seconds,
+                   "perplexity": state.perplexity_history}, fh)
 
 
 def infer(
@@ -891,9 +896,8 @@ def infer(
     ``train`` does.  Returns (doc_id, gamma, doc_ll).
 
     β placement follows ``state.elog_beta``: a matrix is broadcast; a
-    ``beta_relation`` DataFrame is joined — it never materializes on
-    the driver, and below the broadcast threshold AQE broadcasts the
-    join on its own."""
+    ``beta_relation`` DataFrame is joined (AQE broadcasts it below the
+    threshold), never materializing on the driver."""
     from mr_lda_spark.session import ensure_package_shipped
 
     _check_gamma_iter(max_gamma_iter)
@@ -907,7 +911,7 @@ def infer(
             *(["gamma"] if "gamma" in corpus.columns else []),
         )
         beta = spark.sparkContext.broadcast(state.elog_beta)
-    out = _estep(rows, None, state.alpha, beta, max_gamma_iter, False,
+    out = _estep(rows, state.alpha, beta, max_gamma_iter, False,
                  gamma_tol, estep_backend)
     return out.filter(F.col("kind") == "doc").select(
         F.col("id").alias("doc_id"), F.col("vec").alias("gamma"),
@@ -917,11 +921,8 @@ def infer(
 
 def beta_dataframe(spark: SparkSession, state: LdaState) -> DataFrame:
     """Materialize E[log β] as the tall BETA table (schemas.BETA), one
-    row per (topic, term id) with block starts skipped.
-
-    Built from the ndarray via one vectorized pandas frame (Arrow
-    transfer) — at V=100k, K=100 the V×K rows would otherwise crawl
-    through a 10M-tuple Python list and row-at-a-time pickle."""
+    row per (topic, term id) with block starts skipped, through one
+    vectorized pandas frame (a V×K tuple list would crawl)."""
     from mr_lda_spark.schemas import BETA
 
     V1, K = state.elog_beta.shape
@@ -937,11 +938,9 @@ def beta_dataframe(spark: SparkSession, state: LdaState) -> DataFrame:
 
 
 def beta_relation(beta_tall: DataFrame) -> DataFrame:
-    """Fold the tall BETA table (term_id, topic, log_beta — the
-    engine's stored model layout) into the join placement's row form
-    (term_id, beta ARRAY<DOUBLE>[K]).  One shuffle on term_id, K rows
-    per key — the relational inverse of ``beta_dataframe``; never
-    touches the driver."""
+    """Fold the stored tall BETA table (term_id, topic, log_beta) into the
+    join placement's (term_id, beta[K]) rows: one shuffle on term_id,
+    the relational inverse of ``beta_dataframe``."""
     return (
         beta_tall.groupBy("term_id")
         .agg(F.array_sort(F.collect_list(F.struct("topic", "log_beta"))).alias("p"))

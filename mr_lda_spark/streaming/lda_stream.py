@@ -32,7 +32,7 @@ from mr_lda_spark.plans.lda import (
     DEFAULT_LOG_ETA,
     _combine_phi,
     _estep,
-    _pull_stats,
+    _split_combined,
 )
 
 
@@ -85,23 +85,22 @@ def process_micro_batch(
     """One online-VB step: E-step over the micro-batch with the current
     model, then λ ← (1−ρ)λ + ρ·λ̂."""
     K = len(model.alpha)
-    eb_bc = batch_corpus_doc.sparkSession.sparkContext.broadcast(
-        model.elog_beta
-    )
+    spark = batch_corpus_doc.sparkSession
+    eb_bc = spark.sparkContext.broadcast(model.elog_beta)
     out = _estep(
-        batch_corpus_doc, None, model.alpha, eb_bc, max_gamma_iter, True,
-        0.0, None,
-    ).persist()
-    ll, n_docs, n_tokens, _ = _pull_stats(out, K)
-    pdf = _combine_phi(out).toPandas() if n_docs else None  # one Arrow pull
-    out.unpersist()
+        batch_corpus_doc, model.alpha, eb_bc, max_gamma_iter, True, 0.0, None
+    )
+    # φ sums and the stats row in one Arrow pull.
+    ids, sums, (ll, n_docs, n_tokens, _, _) = _split_combined(
+        _combine_phi(out, K, spark.sparkContext.defaultParallelism).toPandas(), K, 1
+    )
     eb_bc.unpersist()
     if n_docs == 0:
         return model
 
     # λ̂: batch stats rescaled as if the whole corpus looked like it.
     stats = np.zeros_like(model.lam)
-    stats[pdf["term_id"].to_numpy(), pdf["topic"].to_numpy()] = pdf["phi"].to_numpy()
+    stats[ids] = sums
     scale = model.corpus_size_estimate / n_docs
     eta_prior = 1e-3  # symmetric topic-word prior
     lam_hat = eta_prior + scale * stats

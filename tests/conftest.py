@@ -12,6 +12,7 @@ LDA_FAMILY = (
     "test_lda_stream", "test_truncate_beta", "test_informed_prior",
     "test_lifecycle", "test_cli", "test_cli_poly", "test_mllib_crosscheck",
     "test_sequencefile", "test_lda_golden", "test_lda_shapes",
+    "test_lda_iteration",
 )
 _deselected: list = []
 

@@ -377,8 +377,9 @@ def test_kernel_gather_equals_row_carried_beta():
 
 @pytest.mark.parametrize("informed", [False, True])
 def test_linear_phi_sums_match_log_space_fold(monkeypatch, informed):
-    """The kernel's linear Σ c·φ partials, through ``_mstep_beta``, give
-    the E[log β] of the reference's log-space fold (``LogMath.add``,
+    """The kernel's linear Σ c·φ partials, through the M-step (the
+    reducer's ψ(λ), the stats row's normalizer), give the E[log β] of
+    the reference's log-space fold (``LogMath.add``,
     TermCombiner.java:30 / TermReducer.java:157-235): per-slot
     log φ + log c folded by logaddexp, then λ = logaddexp(log η, ·).
     Terms repeat across the two batches, a tiny flush bound splits
@@ -404,7 +405,9 @@ def test_linear_phi_sums_match_log_space_fold(monkeypatch, informed):
     run = lda._estep_kernel(
         np.full(K, 0.3), 20, True, sweep_backend=recording_sweep, elog_beta=elog_beta
     )
-    partials = pd.concat([f for f in run(batches) if f["kind"].iloc[0] == "phi"])
+    frames = list(run(batches))
+    partials = pd.concat([f for f in frames if f["kind"].iloc[0] == "phi"])
+    stats_row = pd.concat([f for f in frames if f["kind"].iloc[0] == "stats"])
     assert len(partials) > partials["id"].nunique()  # flushed mid-partition
     phi = np.zeros(elog_beta.shape)
     np.add.at(phi, partials["id"].to_numpy(), np.stack(partials["vec"]))
@@ -419,11 +422,18 @@ def test_linear_phi_sums_match_log_space_fold(monkeypatch, informed):
         np.logaddexp.at(log_phi, terms_pad[valid], contrib)
     assert log_phi[3, 1] < -745.0 and phi[3, 1] == 0.0  # below the least double
 
-    log_eta, eta = lda.DEFAULT_LOG_ETA, None
+    log_eta, none = lda.DEFAULT_LOG_ETA, np.zeros(0, dtype=np.int64)
+    prior = (lda.DEFAULT_ETA, none, none)
     if informed:
-        seeds = [{"topic": 0, "term_id": 3}, {"topic": 2, "term_id": 7}]
-        log_eta = eta_from_rows(SimpleNamespace(collect=lambda: seeds), 12, K)
-        eta = np.exp(log_eta)
+        rows = [{"topic": 0, "term_id": 3}, {"topic": 2, "term_id": 7}]
+        log_eta = eta_from_rows(SimpleNamespace(collect=lambda: rows), 12, K)
+        prior = (lda._ETA_OTHER, np.array([3, 7]), np.array([0, 2]))
     lam = np.exp(np.logaddexp(log_eta, log_phi)[1:])
     want = digamma(lam) - digamma(lam.sum(axis=0))[None, :]
-    np.testing.assert_allclose(lda._mstep_beta(phi, eta)[1:], want, rtol=1e-12)
+
+    ids = np.arange(1, 13)
+    _, _, stats = lda._split_combined(stats_row, K, 1)
+    norm = digamma(lda._eta(prior, ids, K).sum(axis=0) + stats[4])
+    psi_lam = lda._psi_lambda(prior, K)(ids, phi[ids])
+    got = lda._assemble(elog_beta.shape, [12], prior, norm, ids, psi_lam)
+    np.testing.assert_allclose(got[1:], want, rtol=1e-12)

@@ -1,0 +1,155 @@
+"""One EM iteration as Spark runs it: jobs per iteration, the E-step's
+partitioning and plan, owner-safe release of the per-iteration cuts,
+and the CLI's refusal to resume from an incomplete γ snapshot.
+
+The trainer runs on ``N_PARTS`` partitions, fewer than the session's
+shuffle partitions: that is the geometry in which a re-shuffled or
+un-coalesced E-step shows."""
+
+import re
+
+import numpy as np
+import pytest
+
+from mr_lda_spark import cli
+from mr_lda_spark.plans import lda
+
+N_PARTS = 3
+V, K = 30, 3
+# Steady jobs per EM iteration: γ broadcast, E-step, φ pull (broadcast
+# β); β broadcast, doc regroup, E-step, stats pull (join β).
+STEADY_JOBS = {"broadcast": 3, "join": 4}
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    rng = np.random.default_rng(3)
+    rows = []
+    for d in range(40):
+        terms = sorted(set(rng.integers(1, V + 1, 6).tolist()))
+        rows.append((d, terms, rng.integers(1, 4, len(terms)).tolist()))
+    return spark.createDataFrame(
+        rows, "doc_id long, term_ids array<int>, term_counts array<int>"
+    )
+
+
+def _train(spark, corpus, beta_mode, iterations, **kw):
+    return lda.train(
+        spark, corpus, V, K, max_iterations=iterations, max_gamma_iter=3,
+        converge=0.0, beta_mode=beta_mode, shuffle_partitions=N_PARTS, **kw,
+    )
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+def test_steady_iteration_jobs_and_estep_plan(spark, corpus, monkeypatch, beta_mode):
+    """Steady jobs per iteration (3 iterations − 2, from the status
+    tracker) stay pinned; the last E-step runs as ``N_PARTS`` tasks,
+    and its executed plan shuffles nothing but the join placement's
+    one doc regroup — never the corpus cut."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != N_PARTS
+    esteps = []
+
+    def spy(*args, **kwargs):
+        esteps.append(real(*args, **kwargs))
+        return esteps[-1]
+
+    real = lda._estep
+    monkeypatch.setattr(lda, "_estep", spy)
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    jobs = {}
+    try:
+        for iterations in (2, 3):
+            group = f"lda-iteration-{beta_mode}-{iterations}"
+            sc.setJobGroup(group, group)
+            _, state = _train(spark, corpus, beta_mode, iterations)
+            assert len(state.history) == iterations
+            jobs[iterations] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs[3] - jobs[2] == STEADY_JOBS[beta_mode]
+
+    executed = esteps[-1]._jdf.queryExecution().executedPlan()
+    assert executed.execute().getNumPartitions() == N_PARTS
+    final = executed.toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+L?, (\d+)\)", final)
+    want = [("doc_id", str(N_PARTS))] if beta_mode == "join" else []
+    assert exchanges == want, final
+
+
+@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
+def test_mstep_failure_releases_every_cut(spark, corpus, monkeypatch, beta_mode):
+    """An M-step that raises after its job ran leaves no persisted
+    E-step output, β cut or corpus cut behind: ``train`` owns them and
+    frees them on the way out."""
+    placement = {"broadcast": lda._BroadcastBeta, "join": lda._JoinBeta}[beta_mode]
+    real = placement.mstep
+
+    def failing(self, out):
+        real(self, out)
+        raise RuntimeError("injected M-step failure")
+
+    monkeypatch.setattr(placement, "mstep", failing)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        _train(spark, corpus, beta_mode, 2)
+    assert _persistent_rdds(spark) - before == set()
+
+
+def _write_parsed(spark, root, corpus):
+    from pyspark.sql import functions as F
+
+    tall = corpus.select(
+        "doc_id", F.explode(F.arrays_zip("term_ids", "term_counts")).alias("z")
+    ).select(
+        "doc_id",
+        F.col("z.term_ids").alias("term_id"),
+        F.col("z.term_counts").alias("term_count"),
+    )
+    tall.write.parquet(str(root / "document"))
+
+
+def test_resume_from_incomplete_snapshot_is_a_named_error(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """``train --model-index`` refuses a γ snapshot with no ``_SUCCESS``
+    marker, or one missing documents of the corpus, before any EM
+    job; a whole snapshot reaches the trainer as the corpus γ."""
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    _write_parsed(spark, tmp_path / "parsed", corpus)
+    gamma = corpus.selectExpr("doc_id", "array(1.0D, 2.0D, 3.0D) AS gamma")
+    gamma.write.parquet(str(tmp_path / "whole"))
+    gamma.filter("doc_id < 30").write.parquet(str(tmp_path / "partial"))
+    gamma.write.parquet(str(tmp_path / "unfinished"))
+    (tmp_path / "unfinished" / "_SUCCESS").unlink()
+
+    seen = []
+
+    def no_em(spark, corpus_doc, *args, **kwargs):
+        seen.append(corpus_doc.filter("gamma IS NOT NULL").count())
+        raise RuntimeError("EM reached")
+
+    monkeypatch.setattr(lda, "train", no_em)
+
+    def train(snapshot):
+        cli.main([
+            "train", "--input", str(tmp_path / "parsed"),
+            "--output", str(tmp_path / "model"), "--topic", str(K),
+            "--term", str(V), "--iteration", "1",
+            "--model-index", str(tmp_path / snapshot),
+        ])
+
+    with pytest.raises(cli.TruncatedSnapshotError, match="_SUCCESS"):
+        train("unfinished")
+    with pytest.raises(cli.TruncatedSnapshotError, match="10 documents"):
+        train("partial")
+    assert seen == []
+    with pytest.raises(RuntimeError, match="EM reached"):
+        train("whole")
+    assert seen == [40]
