@@ -195,8 +195,8 @@ def cmd_train(args) -> None:
             eta = spark.read.parquet(args.informed_prior)
 
     # --beta-mode join keeps β a distributed relation — the scale path
-    # when V×K exceeds executor memory; the informed prior then rides
-    # as a distributed η relation.
+    # when V×K exceeds executor memory.  The informed prior is collected
+    # once as its (topic, term_id) seed pairs in either placement.
     final_gamma, state = lda.train(
         spark,
         corpus_doc,
@@ -238,6 +238,26 @@ def cmd_train(args) -> None:
     )
 
 
+def _newest_snapshot(model: str, pattern: str) -> str:
+    """The file matching ``pattern`` in ``model`` with the largest
+    iteration suffix, parsed as an int (lexicographic order puts
+    alpha-9 after alpha-10 — ADVICE r6)."""
+    import glob
+    import re
+
+    def it(p: str) -> int:
+        m = re.search(r"-(\d+)(?:\.json)?$", p)
+        return int(m.group(1)) if m else -1
+
+    found = glob.glob(os.path.join(model, pattern))
+    if not found:
+        raise FileNotFoundError(
+            f"model directory {model} has no {pattern} (an incomplete "
+            "model, or --language larger than the model's)"
+        )
+    return max(found, key=it)
+
+
 def cmd_train_poly(args) -> None:
     """polylda.ParseCorpus + polylda.VariationalInference equivalent:
     raw polylingual corpus (docId \\t text_lang0 \\t text_lang1 ...,
@@ -247,14 +267,18 @@ def cmd_train_poly(args) -> None:
     encode the corpus with the MODEL's dictionaries and run the γ-only
     held-out pass with β joined as a relation (no driver β
     materialization) instead of training."""
-    import glob as globlib
-
     from pyspark.sql import functions as F
 
     from mr_lda_spark.operators import parse
     from mr_lda_spark.plans import lda
     from mr_lda_spark.sources.corpus import read_raw_corpus_poly, write_table
 
+    model = getattr(args, "test", None)
+    if model:  # the whole model is found before any Spark job
+        alpha_path = _newest_snapshot(model, "alpha-*.json")
+        beta_paths = [
+            _newest_snapshot(model, f"beta-lang{lang}-*") for lang in range(args.language)
+        ]
     spark = _spark("mrlda-train-poly")
     raw = read_raw_corpus_poly(spark, args.input, args.language)
     titles = parse.build_title_index(raw, "title")
@@ -266,40 +290,17 @@ def cmd_train_poly(args) -> None:
             "term"
         ),
     )
-    if getattr(args, "test", None):
-        dicts = spark.read.parquet(os.path.join(args.test, "term"))
+    if model:
+        dicts = spark.read.parquet(os.path.join(model, "term"))
     else:
         dicts = parse.build_dictionary_per_lang(tokens)
-    tall = (
-        tokens.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-        .join(F.broadcast(dicts.select("lang", "term", "term_id")), ["lang", "term"])
-        .select(
-            "doc_id", "lang", "term_id",
-            F.col("term_count").cast("int").alias("term_count"),
-        )
-    )
-    sizes = dict(dicts.groupBy("lang").count().collect())
-    num_terms = [sizes.get(i, 0) for i in range(args.language)]
-    if getattr(args, "test", None):
-        model = args.test
-
-        # newest snapshot = largest ITERATION suffix, parsed as an int
-        # (lexicographic sort puts alpha-9 after alpha-10 — ADVICE r6)
-        def _newest(pattern: str) -> str:
-            import re as _re
-
-            def it(p: str) -> int:
-                m = _re.search(r"-(\d+)(?:\.json)?$", p)
-                return int(m.group(1)) if m else -1
-
-            return max(globlib.glob(os.path.join(model, pattern)), key=it)
-
-        with open(_newest("alpha-*.json")) as fh:
+    tall, num_terms = parse.encode_corpus_poly(tokens, dicts, args.language)
+    if model:
+        with open(alpha_path) as fh:
             alpha = np.asarray(json.load(fh)["alpha"])
         beta_tall = None
-        for lang in range(args.language):
-            part = spark.read.parquet(_newest(f"beta-lang{lang}-*")).withColumn(
+        for lang, path in enumerate(beta_paths):
+            part = spark.read.parquet(path).withColumn(
                 "term_id", lda.lang_term_id(F.lit(lang), F.col("term_id"), num_terms)
             )
             beta_tall = part if beta_tall is None else beta_tall.unionByName(part)

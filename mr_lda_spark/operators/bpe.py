@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mr_lda_spark.operators.lifecycle import drop_cut
 from mr_lda_spark.operators.localrel import local_df
 
 EOW = "</w>"
@@ -129,31 +130,38 @@ def train_bpe(
 
     Driver traffic: exactly one row per merge (the argmax pair).  The
     symbol relation localCheckpoints each iteration so lineage stays
-    flat across merges."""
+    flat across merges; each cut is freed once the next one is built,
+    and the last before returning (the merge table is built from the
+    collected rows)."""
     spark = docs.sparkSession
     syms = _initial_symbols(word_counts(docs, text_col)).localCheckpoint()
     merges = []
-    for rank in range(num_merges):
-        best = (
-            pair_counts(syms)
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("left").asc(),
-                F.col("right").asc(),
+    try:
+        for rank in range(num_merges):
+            best = (
+                pair_counts(syms)
+                .orderBy(
+                    F.col("pair_count").desc(),
+                    F.col("left").asc(),
+                    F.col("right").asc(),
+                )
+                .limit(1)
+                .collect()
             )
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["pair_count"] < min_pair_count:
-            break
-        b = best[0]
-        merges.append((rank, b["left"], b["right"], int(b["pair_count"])))
-        syms = syms.select(
-            _merge_pair_kernel(b["left"], b["right"])(F.col("syms")).alias(
-                "syms"
-            ),
-            "count",
-        ).localCheckpoint()
+            if not best or best[0]["pair_count"] < min_pair_count:
+                break
+            b = best[0]
+            merges.append((rank, b["left"], b["right"], int(b["pair_count"])))
+            merged = syms.select(
+                _merge_pair_kernel(b["left"], b["right"])(F.col("syms")).alias(
+                    "syms"
+                ),
+                "count",
+            ).localCheckpoint()  # eager: built before its source goes
+            drop_cut(syms)
+            syms = merged
+    finally:
+        drop_cut(syms)
     return local_df(
         spark, merges, "rank int, left string, right string, pair_count long"
     )

@@ -167,8 +167,8 @@ class ReliableCheckpointSweeper:
       its own checkpoint, so nothing can reference the superseded
       generation.  Deleting at supersede time instead would be wrong —
       within an iteration, relations built BEFORE the newer cut (the
-      persisted E-step ``out``) can still re-read the older files on
-      task retry or persist eviction.
+      E-step output, a lazy cut that the M-step's job materializes)
+      can still re-read the older files on task retry.
 
     Slot-less cuts (``slot=None`` — the one-time corpus/η cuts) and
     non-reliable modes pass straight through untracked; the final

@@ -291,6 +291,52 @@ def build_dictionary_per_lang(
     )
 
 
+def encode_corpus_poly(
+    tokens: DataFrame, dicts: DataFrame, n_langs: int
+) -> tuple[DataFrame, list[int]]:
+    """J4: dictionary-encode a polylingual corpus.  ``tokens`` are
+    (doc_id, lang, term) occurrences with ``lang`` the dense 0-based
+    language index, ``dicts`` the per-language dictionaries.  Returns
+    the tall (doc_id, lang, term_id, term_count) relation and V per
+    language, counted in one job."""
+    tall = (
+        tokens.groupBy("doc_id", "lang", "term")
+        .agg(F.count(F.lit(1)).alias("term_count"))
+        .join(F.broadcast(dicts.select("lang", "term", "term_id")), ["lang", "term"])
+        .select(
+            "doc_id", "lang", "term_id",
+            F.col("term_count").cast("int").alias("term_count"),
+        )
+    )
+    sizes = dict(dicts.groupBy("lang").count().collect())
+    return tall, [sizes.get(i, 0) for i in range(n_langs)]
+
+
+def polylingual_corpus(
+    docs: DataFrame, langs: Sequence[str], group
+) -> tuple[DataFrame, DataFrame, list[int]]:
+    """A polylingual corpus from one monolingual documents table: the
+    documents in ``langs`` that share ``group`` (a Column, e.g.
+    ``doc_id % 150``) form one multilingual document, and every token
+    of the group is counted under each language present in it.
+    Returns (tall, dicts, num_terms) — ``encode_corpus_poly``'s
+    relation, the per-language dictionaries and V per language."""
+    docs = docs.filter(F.col("lang").isin(list(langs))).withColumn(
+        "poly_doc_id", group
+    )
+    tokens = tokenize(docs, doc_id_col="poly_doc_id").join(
+        docs.select(F.col("poly_doc_id").alias("doc_id"), "lang").distinct(),
+        "doc_id",
+    )
+    lang_index = F.lit(None).cast("int")
+    for i, lang in enumerate(langs):
+        lang_index = F.when(F.col("lang") == lang, F.lit(i)).otherwise(lang_index)
+    tokens = tokens.withColumn("lang", lang_index)
+    dicts = build_dictionary_per_lang(tokens)
+    tall, num_terms = encode_corpus_poly(tokens, dicts, len(langs))
+    return tall, dicts, num_terms
+
+
 def build_title_index(docs: DataFrame, title_col: str = "title") -> DataFrame:
     """Title index: dense 1-based doc ids by title order
     (ParseCorpus.java:698-710 runs this single-threaded in the driver —

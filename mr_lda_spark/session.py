@@ -10,6 +10,7 @@ broadcast instead of shuffling.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -68,6 +69,23 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def no_auto_broadcast(spark: SparkSession):
+    """Auto-broadcast joins off inside the block, so a β join past the
+    broadcast cliff stays a shuffle join at any test size; the previous
+    value (or its absence) comes back on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:

@@ -44,6 +44,7 @@ def probe(spark, docs) -> dict[str, float]:
 
     from mr_lda_spark.operators import curation, dedup, parse, textops
     from mr_lda_spark.plans import lda
+    from mr_lda_spark.session import no_auto_broadcast
 
     times: dict[str, float] = {}
 
@@ -226,10 +227,7 @@ def probe(spark, docs) -> dict[str, float]:
             parse.term_stats(tokens), docs.count()
         )
         tall = parse.encode_corpus(tokens, dictionary)
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "-1")
-        try:
+        with no_auto_broadcast(spark):
             lda.train(
                 spark,
                 tall,
@@ -241,11 +239,6 @@ def probe(spark, docs) -> dict[str, float]:
                 seed=1,
                 beta_mode="join",
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
     t("lda_join_one_iteration_k8", lda_join_one_iter)
 
@@ -253,38 +246,9 @@ def probe(spark, docs) -> dict[str, float]:
         # Scalable polylingual corpus: doc pairs (floor(doc_id / 2))
         # form one multilingual doc — poly-doc count grows linearly
         # with the tier, unlike the registry's fixed %150 grouping.
-        langs = ["en", "es"]
-        d = docs.filter(F.col("lang").isin(langs)).withColumn(
-            "poly_doc_id", F.floor(F.col("doc_id") / 2)
+        tall, _, num_terms = parse.polylingual_corpus(
+            docs, ["en", "es"], F.floor(F.col("doc_id") / 2)
         )
-        tokens = parse.tokenize(d, doc_id_col="poly_doc_id").join(
-            d.select(F.col("poly_doc_id").alias("doc_id"), "lang").distinct(),
-            "doc_id",
-        )
-        lang_expr = F.lit(None).cast("int")
-        for i, lang in enumerate(langs):
-            lang_expr = F.when(F.col("lang") == lang, F.lit(i)).otherwise(
-                lang_expr
-            )
-        tokens = tokens.withColumn("lang", lang_expr)
-        dicts = parse.build_dictionary_per_lang(tokens)
-        tall = (
-            tokens.groupBy("doc_id", "lang", "term")
-            .agg(F.count(F.lit(1)).alias("term_count"))
-            .join(
-                F.broadcast(dicts.select("lang", "term", "term_id")),
-                ["lang", "term"],
-            )
-            .select(
-                "doc_id",
-                "lang",
-                "term_id",
-                F.col("term_count").cast("int").alias("term_count"),
-            )
-        )
-        num_terms = [
-            dicts.filter(F.col("lang") == i).count() for i in range(len(langs))
-        ]
         return tall, num_terms
 
     def polylda_one_iter():
@@ -300,20 +264,12 @@ def probe(spark, docs) -> dict[str, float]:
         # Distributed per-language β (VERDICT r5 next #1): force the β
         # join to stay a SHUFFLE join, same protocol as the mono tier.
         tall, num_terms = _poly_prep()
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "-1")
-        try:
+        with no_auto_broadcast(spark):
             lda.train(
                 spark, tall, num_terms, num_topics=4,
                 max_iterations=1, max_gamma_iter=25, converge=0.0, seed=1,
                 beta_mode="join",
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
     t("polylda_join_one_iteration_k4", polylda_join_one_iter)
 
@@ -348,18 +304,10 @@ def probe(spark, docs) -> dict[str, float]:
 
     def infer_join_forced():
         join_state = as_relation(state)
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "-1")
-        try:
+        with no_auto_broadcast(spark):
             lda.infer(
                 spark, tall, join_state, max_gamma_iter=25
             ).agg(F.sum("doc_ll")).collect()
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
     t("lda_infer_heldout_join_k8", infer_join_forced)
     tall.unpersist()
@@ -381,18 +329,10 @@ def probe(spark, docs) -> dict[str, float]:
 
     def poly_infer_join_forced():
         join_state = as_relation(pstate)
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "-1")
-        try:
+        with no_auto_broadcast(spark):
             lda.infer(
                 spark, tall_p, join_state, max_gamma_iter=25
             ).agg(F.sum("doc_ll")).collect()
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
     t("polylda_infer_heldout_join_k4", poly_infer_join_forced)
     tall_p.unpersist()

@@ -66,42 +66,14 @@ POLY_LANGS = ["en", "es"]
 @pytest.fixture(scope="session")
 def poly_tall(spark, documents):
     """Polylingual corpus from the documents table: docs sharing
-    (doc_id % 150) form one multilingual document; each source doc
-    contributes its language's bag of words.  Returns the encoded
+    (doc_id % 150) form one multilingual document
+    (``parse.polylingual_corpus``).  Returns the encoded
     (doc_id, lang, term_id, term_count) relation and V per language."""
     from pyspark.sql import functions as F
 
     from mr_lda_spark.operators import parse
 
-    docs = documents.filter(F.col("lang").isin(POLY_LANGS)).withColumn(
-        "poly_doc_id", F.col("doc_id") % 150
+    tall, _, num_terms = parse.polylingual_corpus(
+        documents, POLY_LANGS, F.col("doc_id") % 150
     )
-    tokens = parse.tokenize(docs, doc_id_col="poly_doc_id").join(
-        docs.select(F.col("poly_doc_id").alias("doc_id"), "lang").distinct(),
-        "doc_id",
-    )
-    # lang string -> dense 0-based index
-    lang_expr = F.lit(None).cast("int")
-    for i, lang in enumerate(POLY_LANGS):
-        lang_expr = F.when(F.col("lang") == lang, F.lit(i)).otherwise(lang_expr)
-    tokens = tokens.withColumn("lang", lang_expr)
-    dicts = parse.build_dictionary_per_lang(tokens)
-    tall = (
-        tokens.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("term_count"))
-        .join(
-            F.broadcast(dicts.select("lang", "term", "term_id")),
-            ["lang", "term"],
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "term_id",
-            F.col("term_count").cast("int").alias("term_count"),
-        )
-        .localCheckpoint()
-    )
-    num_terms = [
-        dicts.filter(F.col("lang") == i).count() for i in range(len(POLY_LANGS))
-    ]
-    return tall, num_terms
+    return tall.localCheckpoint(), num_terms

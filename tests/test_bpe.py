@@ -75,6 +75,17 @@ def test_train_bpe_min_count_stops(spark, docs):
     assert bpe.train_bpe(docs, num_merges=5, min_pair_count=10**9).count() == 0
 
 
+def test_train_bpe_frees_its_round_cuts(spark, docs):
+    """Each merge round's symbol-relation cut is freed once the next is
+    built, and the last before the merge table returns: the trainer
+    leaves the persisted RDDs as it found them."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    merges = bpe.train_bpe(docs, num_merges=3)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    assert [r["rank"] for r in merges.collect()] == [0, 1, 2]
+
+
 @pytest.mark.slow
 def test_encode_bpe_reconstructs_words(spark, docs):
     """Concatenating a doc's BPE tokens and splitting on the

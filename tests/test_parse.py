@@ -128,8 +128,6 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
     tokenize(docs, stopwords=STOPWORDS), and holds no second cache."""
     from mr_lda_spark import queries_registry as qr
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fresh = key not in qr._PARSE_CACHE
     docs, _, tokens_raw, tokens_stop, dictionary = qr._parse_shared(spark, sf_dir)
     try:
         assert tokens_raw.storageLevel.useMemory  # the one token cache
@@ -139,8 +137,7 @@ def test_parse_shared_single_token_cache(spark, sf_dir):
             map(tuple, parse.tokenize(docs, stopwords=qr.STOPWORDS).collect())
         )
         assert got == want
-    finally:
-        if fresh:  # release only what this call persisted
-            del qr._PARSE_CACHE[key]
-            tokens_raw.unpersist()
-            dictionary.unpersist()
+    finally:  # the owner unpersists the entry; a later caller rebuilds it
+        qr.WORKSPACE.release(("_parse_shared", sf_dir))
+    assert not tokens_raw.storageLevel.useMemory
+    assert not dictionary.storageLevel.useMemory

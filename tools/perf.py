@@ -157,8 +157,7 @@ def profile_queries(spark, names: list) -> dict:
         if name not in queries_registry.QUERIES:
             print(f"skip unknown {name}", file=sys.stderr)
             continue
-        queries_registry._PARSE_CACHE.clear()
-        queries_registry._LDA_CACHE.clear()
+        queries_registry.WORKSPACE.release()
         spark.catalog.clearCache()
         sc.setJobGroup(name, name)
         construct, action = run_query(spark, name, default_sf())
