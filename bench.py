@@ -362,10 +362,11 @@ def main() -> None:
     # Warm the JVM/codegen on the tiny sf so first-query JIT cost
     # doesn't land on a headline number — one representative of each
     # major plan shape (scan-agg, join-topk, window, token pipeline,
-    # shingle self-join, Arrow mapInPandas).  The LDA warm-up matters
-    # most: the FIRST mapInPandas of a session forks the Python worker
-    # fleet (32 workers × numpy/pandas import — measured ~29 s of the
-    # 32 s first-iteration time at sf0.1); on a real cluster that spawn
+    # shingle self-join, the Arrow E-step).  The LDA warm-up matters
+    # most: the FIRST E-step (mapInArrow) of a session forks the Python
+    # worker fleet (32 workers × numpy/pyarrow import; measured ~29 s of
+    # the 32 s first-iteration time at sf0.1 when the E-step was still
+    # mapInPandas and imported pandas too); on a real cluster that spawn
     # happens once per executor lifetime, so letting it land on one
     # headline query would measure deployment cost, not the operator.
     for warm in WARM_QUERIES:

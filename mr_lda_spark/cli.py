@@ -30,14 +30,16 @@ def _spark(app):
 
 class TruncatedSnapshotError(ValueError):
     """A ``--model-index`` γ snapshot whose write never finished (no
-    ``_SUCCESS`` marker) or that lacks documents the corpus has:
-    resuming from it would cold-start part of the corpus silently."""
+    ``_SUCCESS`` marker), that lacks documents the corpus has, or whose
+    γ has another width than ``--topic``: resuming from it would
+    cold-start part of the corpus silently."""
 
 
-def _resume_gamma(spark, path: str, corpus_doc):
+def _resume_gamma(spark, path: str, corpus_doc, num_topics: int):
     """The (doc_id, gamma) snapshot at ``path``, checked whole before
-    any EM job runs.  Documents without tokens are never in a snapshot
-    (the E-step skips them), so only the others must be covered."""
+    any EM job runs, in one aggregate job.  Documents without tokens
+    are never in a snapshot (the E-step skips them), so only the others
+    must be covered, each by a γ of ``num_topics`` entries."""
     from pyspark.sql import functions as F
 
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
@@ -45,13 +47,22 @@ def _resume_gamma(spark, path: str, corpus_doc):
     if not fs.exists(spark._jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS")):
         raise TruncatedSnapshotError(f"{path}: no _SUCCESS marker; the write did not finish")
     gamma = spark.read.parquet(path).select("doc_id", "gamma")
-    missing = (
+    missing, wrong, widths = (
         corpus_doc.filter(F.size("term_ids") > 0).select("doc_id")
-        .join(gamma, "doc_id", "left_anti").count()
+        .join(gamma, "doc_id", "left")
+        .select(F.col("gamma").isNull().alias("missing"),
+                F.when(F.size("gamma") != num_topics, F.size("gamma")).alias("width"))
+        .agg(F.count_if("missing"), F.count("width"), F.array_sort(F.collect_set("width")))
+        .first()
     )
     if missing:
         raise TruncatedSnapshotError(
             f"{path}: {missing} documents of the corpus have no gamma in the snapshot"
+        )
+    if wrong:
+        raise TruncatedSnapshotError(
+            f"{path}: {wrong} documents have gamma of width {', '.join(map(str, widths))}, "
+            f"but --topic is {num_topics}"
         )
     return gamma
 
@@ -176,7 +187,7 @@ def cmd_train(args) -> None:
     if args.model_index:
         # Resume (-modelindex): join the gamma snapshot back onto the
         # corpus so training warm-starts from iteration N's posterior.
-        gamma = _resume_gamma(spark, args.model_index, corpus_doc)
+        gamma = _resume_gamma(spark, args.model_index, corpus_doc, args.topic)
         corpus_doc = corpus_doc.drop("gamma").join(gamma, "doc_id", "left")
     num_terms = args.term or spark.read.parquet(
         os.path.join(args.input, "term")

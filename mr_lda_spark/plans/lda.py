@@ -11,11 +11,14 @@ as job counters, and a driver-side Newton–Raphson α update
 one E-step (``_estep_kernel`` around ``numpy_sweep_backend``) ONCE
 per iteration, for every mode:
 
-- E-step: ``mapInPandas`` over the corpus cut's own partitions.  The
-  kernel pads each Arrow batch to ``(B, n_max, K)``, runs the sweeps,
-  and emits γ/ll doc rows, per-partition φ partials and one stats row
-  (the reference's counters, A6/A7).  Its output is cut lazily: the
-  M-step's job runs it, and the next iteration reads γ from the cut.
+- E-step: ``mapInArrow`` over the corpus cut's own partitions.  The
+  kernel pads each Arrow batch to ``(B, n_max, K)`` with one scatter
+  from the list offsets, runs the sweeps, and emits γ/ll doc rows,
+  per-partition φ partials and one stats row (the reference's
+  counters, A6/A7) as Arrow record batches.  Its output is cut
+  lazily: the M-step's job runs it, and the next iteration reads γ
+  from the cut.  The φ combine and the driver's pulls (``toArrow``)
+  exchange Arrow too.
 - M-step: one shuffle sums the φ partials per term id, the stats row
   riding along, and each reducer maps λ = η + Σ c·φ to ψ(λ); the
   normalizer ψ(Σ_v λ) is the stats row's Σ c·φ per (language, topic)
@@ -52,7 +55,8 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,6 +79,8 @@ _ETA_SEED, _ETA_OTHER = float(np.exp(LOG_ETA_SEED)), float(np.exp(LOG_ETA_OTHER)
 # 'stats' row per partition (id = -1, vec = [ELBO, documents, tokens,
 # α sufficient statistic (K), Σ c·φ per (language, topic) (L×K)]).
 _ESTEP_SCHEMA = "kind string, id long, vec array<double>, ll double"
+_ESTEP_ARROW = pa.schema([("kind", pa.string()), ("id", pa.int64()),
+                          ("vec", pa.list_(pa.float64())), ("ll", pa.float64())])
 _STATS_HEAD = 3
 
 # φ accumulator flush bound (terms per partition before a partial is
@@ -180,12 +186,14 @@ def unified_corpus(corpus: DataFrame, num_terms) -> DataFrame:
     return corpus
 
 
-def _doc_form(corpus: DataFrame) -> DataFrame:
-    if "term_ids" in corpus.columns:
-        return corpus
-    from mr_lda_spark.operators.parse import corpus_to_doc_form
+def _doc_rows(corpus: DataFrame) -> DataFrame:
+    """The kernel's doc-form input: (doc_id, term_ids, term_counts[, gamma])."""
+    if "term_ids" not in corpus.columns:
+        from mr_lda_spark.operators.parse import corpus_to_doc_form
 
-    return corpus_to_doc_form(corpus)
+        corpus = corpus_to_doc_form(corpus)
+    gamma = ["gamma"] if "gamma" in corpus.columns else []
+    return corpus.select("doc_id", "term_ids", "term_counts", *gamma)
 
 
 def _tall_form(corpus: DataFrame) -> DataFrame:
@@ -345,6 +353,38 @@ class _PhiSums:
             self.ids, self.sums = self.ids[:0], self.sums[:0]
 
 
+def _lens(lists) -> np.ndarray:
+    """Per-row lengths of an Arrow list column, 0 for a null list."""
+    return pc.list_value_length(lists).fill_null(0).to_numpy()
+
+
+def _values(lists) -> np.ndarray:
+    """The list column's values in ``_lens`` order: ``list_flatten``
+    honours a slice's offset and skips the segments of null lists."""
+    return pc.list_flatten(lists).to_numpy()
+
+
+def _rows(ids, vecs: np.ndarray, kind=None, ll=None) -> pa.RecordBatch:
+    """``_ESTEP_ARROW`` rows from (n,) ids and (n, w) vecs (null ll when
+    ``ll`` is None), or only their (id, vec) columns when ``kind`` is."""
+    n, w = vecs.shape
+    cols = [pa.array(ids, pa.int64()), pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * w + 1, w), pa.int32()), pa.array(vecs.ravel()))]
+    if kind is None:
+        return pa.RecordBatch.from_arrays(cols, names=["id", "vec"])
+    ll = pa.nulls(n, pa.float64()) if ll is None else pa.array(ll, pa.float64())
+    return pa.RecordBatch.from_arrays([pa.repeat(kind, n), *cols, ll], schema=_ESTEP_ARROW)
+
+
+def _split(rows, K: int):
+    """(id, vec) rows → ((m, w) stats vecs or None, term ids, (n, K)
+    vecs): stats rows are the ids below 0."""
+    is_stats = rows.column("id").to_numpy() < 0
+    stats, terms = rows.filter(is_stats), rows.filter(~is_stats)
+    vecs = _values(stats.column("vec")).reshape(len(stats), -1) if len(stats) else None
+    return vecs, terms.column("id").to_numpy(), _values(terms.column("vec")).reshape(-1, K)
+
+
 def _estep_kernel(
     alpha: np.ndarray,
     max_gamma_iter: int,
@@ -355,7 +395,7 @@ def _estep_kernel(
     offsets=(0,),
     beta_norm=None,
 ):
-    """Build the mapInPandas function for one E-step pass.
+    """Build the mapInArrow function for one E-step pass.
 
     Input rows: (doc_id, term_ids, term_counts, gamma) plus, when
     ``elog_beta`` is None (join placement), ``betas`` — each token's β
@@ -367,7 +407,7 @@ def _estep_kernel(
     (VariationalInferenceOptions.java:166-178): no φ rows.
 
     Per document (DocumentMapper.java:184-259 semantics):
-      γ⁰ = carried γ, else α + N/K
+      γ⁰ = carried γ of width K, else α + N/K
       sweeps (``sweep_backend``, default ``numpy_sweep_backend``):
         logφ_w = E[log β_w] + ψ(γ), normalized;  γ = α + Σ_w c_w φ_w
       doc ELBO = L_α + Σ lnΓ(γ) − lnΓ(Σγ) + Σ_w c_w φ_w (E[log β_w] − logφ_w)
@@ -383,49 +423,40 @@ def _estep_kernel(
         phi_acc = _PhiSums(K)
         stats = np.zeros(_STATS_HEAD + K + L * K)
         lang_sums = stats[_STATS_HEAD + K :].reshape(L, K)  # a view
-        seen_any = False
 
-        def phi_frames(final):
-            for ids, vecs in phi_acc.drain(final):
-                yield pd.DataFrame({"kind": "phi", "id": ids, "vec": list(vecs), "ll": None})
-
-        for pdf in batches:
-            # Batch-vectorized E-step: pad every doc in the Arrow
-            # batch to (B, n_max) and run all sweeps as whole-batch
-            # tensor ops (no per-doc Python loop).
-            term_lists = [np.asarray(t, dtype=np.int64) for t in pdf["term_ids"]]
-            keep = [i for i, t in enumerate(term_lists) if t.size > 0]  # P7
-            if not keep:
+        for batch in batches:
+            # Batch-vectorized E-step: every doc of the Arrow batch is
+            # scattered into (B, n_max) at (row, col) from the list
+            # lengths, and all sweeps run as whole-batch tensor ops.
+            lens = _lens(batch.column("term_ids"))
+            if not lens.all():  # P7: documents without terms are skipped
+                batch, lens = batch.filter(lens > 0), lens[lens > 0]
+            if not lens.size:
                 continue
-            seen_any = True
-            B = len(keep)
-            lens = np.array([term_lists[i].size for i in keep])
-            n_max = int(lens.max())
+            B, n_max = lens.size, int(lens.max())
+            row = np.repeat(np.arange(B), lens)
+            col = np.arange(row.size) - np.repeat(np.cumsum(lens) - lens, lens)
             terms_pad = np.zeros((B, n_max), dtype=np.int64)
+            terms_pad[row, col] = _values(batch.column("term_ids"))
             counts_pad = np.zeros((B, n_max))
-            counts = pdf["term_counts"]
-            for j, i in enumerate(keep):
-                terms_pad[j, : lens[j]] = term_lists[i]
-                counts_pad[j, : lens[j]] = np.asarray(counts.iloc[i], dtype=np.float64)
+            counts_pad[row, col] = _values(batch.column("term_counts"))
             lang = _lang_index(terms_pad, offsets)
             if eb is not None:
                 elb = eb[terms_pad]  # (B, n_max, K)
             else:
                 elb = np.full((B, n_max, K), DEFAULT_LOG_ETA)
-                for j, i in enumerate(keep):
-                    elb[j, : lens[j]] = np.asarray(
-                        list(pdf["betas"].iloc[i]), dtype=np.float64
-                    )
+                elb[row, col] = _values(pc.list_flatten(batch.column("betas"))).reshape(-1, K)
                 if beta_norm is not None:
                     elb -= beta_norm[lang]
 
             n_tokens = counts_pad.sum(axis=1)  # (B,)
             gamma = np.tile(alpha, (B, 1)) + n_tokens[:, None] / K
-            carried = pdf["gamma"].tolist() if "gamma" in pdf else [None] * len(pdf)
-            for j, i in enumerate(keep):
-                g = carried[i]
-                if g is not None and len(g) == K:
-                    gamma[j] = np.asarray(g, dtype=np.float64)
+            if "gamma" in batch.schema.names:
+                # A null or wrong-width γ cold-starts.
+                glens = _lens(batch.column("gamma"))
+                warm = glens == K
+                start = (np.cumsum(glens) - glens)[warm]
+                gamma[warm] = _values(batch.column("gamma"))[start[:, None] + np.arange(K)]
 
             gamma, lpn, phi = sweep(
                 elb, counts_pad, gamma, alpha, max_gamma_iter, gamma_tol
@@ -441,20 +472,17 @@ def _estep_kernel(
 
             # Doc rows carry ONLY gamma + ll — the static term arrays
             # never round-trip back through Arrow.
-            ids = pdf["doc_id"].iloc[keep].astype("int64").values
-            yield pd.DataFrame({"kind": "doc", "id": ids, "vec": list(gamma), "ll": doc_ll})
+            yield _rows(batch.column("doc_id").to_numpy(), gamma, "doc", doc_ll)
             if learning:
                 valid = counts_pad > 0
                 cphi = counts_pad[valid][:, None] * phi[valid]
                 lang_sums += np.eye(L)[lang[valid]].T @ cphi
                 phi_acc.add(terms_pad[valid], cphi)
-                yield from phi_frames(final=False)
+                yield from (_rows(i, v, "phi") for i, v in phi_acc.drain(final=False))
 
-        if not seen_any:
-            return
-        if learning:
-            yield from phi_frames(final=True)
-        yield pd.DataFrame({"kind": ["stats"], "id": [-1], "vec": [stats], "ll": [None]})
+        if stats[1]:  # documents seen
+            yield from (_rows(i, v, "phi") for i, v in phi_acc.drain(final=True))
+            yield _rows([-1], stats[None, :], "stats")
 
     return run
 
@@ -464,7 +492,7 @@ def _estep(rows, alpha, elog_beta, max_gamma_iter, learning, gamma_tol,
     """Run the kernel over doc rows (a missing γ column cold-starts)."""
     kernel = _estep_kernel(alpha, max_gamma_iter, learning, gamma_tol,
                            sweep_backend, elog_beta, offsets, beta_norm)
-    return rows.mapInPandas(kernel, schema=_ESTEP_SCHEMA)
+    return rows.mapInArrow(kernel, schema=_ESTEP_SCHEMA)
 
 
 def _combine_phi(out: DataFrame, K: int, n_parts: int, post=None) -> DataFrame:
@@ -475,36 +503,32 @@ def _combine_phi(out: DataFrame, K: int, n_parts: int, post=None) -> DataFrame:
 
     def run(batches):
         acc, stats = _PhiSums(K), []
-        for pdf in batches:
-            st = (pdf["id"] < 0).to_numpy()
-            stats += list(pdf["vec"][st])
-            if not st.all():
-                acc.add(pdf["id"][~st].to_numpy(), np.stack(pdf["vec"][~st].to_numpy()))
+        for batch in batches:
+            st, ids, vecs = _split(batch, K)
+            if st is not None:
+                stats.append(st)
+            acc.add(ids, vecs)
         for ids, sums in acc.drain(final=True):
-            yield pd.DataFrame({"id": ids, "vec": list(sums if post is None else post(ids, sums))})
+            yield _rows(ids, sums if post is None else post(ids, sums))
         if stats:
-            yield pd.DataFrame({"id": [-1], "vec": [np.sum(stats, axis=0)]})
+            yield _rows([-1], np.concatenate(stats).sum(axis=0, keepdims=True))
 
     return (
         out.filter(F.col("kind") != "doc")
         .select("id", "vec")
         .repartition(n_parts, "id")
-        .mapInPandas(run, schema="id long, vec array<double>")
+        .mapInArrow(run, schema="id long, vec array<double>")
     )
 
 
-def _split_combined(pdf: pd.DataFrame, K: int, L: int):
+def _split_combined(rows: pa.Table, K: int, L: int):
     """Combined rows → (term ids, (n, K) vecs, (elbo, documents, tokens,
     α statistic, (L, K) Σ c·φ)); zero stats when no token was seen."""
-    is_stats = (pdf["id"] < 0).to_numpy()
-    v = np.zeros(_STATS_HEAD + K + L * K)
-    if is_stats.any():
-        v = np.asarray(pdf["vec"][is_stats].iloc[0], dtype=np.float64)
-    terms = pdf[~is_stats]
-    vecs = np.stack(terms["vec"].to_numpy()) if len(terms) else np.zeros((0, K))
+    st, ids, vecs = _split(rows, K)
+    v = np.zeros(_STATS_HEAD + K + L * K) if st is None else st[0]
     stats = (float(v[0]), int(v[1]), float(v[2]), v[_STATS_HEAD : _STATS_HEAD + K],
              v[_STATS_HEAD + K :].reshape(L, K))
-    return terms["id"].to_numpy(), vecs, stats
+    return ids, vecs, stats
 
 
 def _prior(eta_seeds, num_terms, K: int):
@@ -595,12 +619,8 @@ class _BroadcastBeta(_Placement):
         self.truncate_beta, self._bc, self.num_docs = truncate_beta, None, 0
 
     def load(self, corpus: DataFrame) -> None:
-        doc = _doc_form(corpus)
-        cols = ["doc_id", "term_ids", "term_counts"]
-        cols += ["gamma"] if "gamma" in doc.columns else []
         self.base = cut_corpus_lineage(  # the ONE materialization of the input
-            doc.select(*cols).repartition(self.n_parts, "doc_id"),
-            self.checkpoint,
+            _doc_rows(corpus).repartition(self.n_parts, "doc_id"), self.checkpoint
         )
 
     def estep_rows(self, gamma):
@@ -615,7 +635,7 @@ class _BroadcastBeta(_Placement):
     def mstep(self, out: DataFrame):
         state = self.state
         # ~V rows of ψ(λ) plus the stats row: one Arrow pull.
-        ids, psi_lam, stats = _split_combined(self.combine(out).toPandas(), self.K, self.L)
+        ids, psi_lam, stats = _split_combined(self.combine(out).toArrow(), self.K, self.L)
         self._bc.unpersist()  # the E-step has run
         self.num_docs = stats[1]
         norm = digamma(self.eta_mass + stats[4])
@@ -663,11 +683,12 @@ def _join_rows(tall: DataFrame, beta: DataFrame, K: int, gamma=None,
 
 def _matrix_relation(spark: SparkSession, elog_beta: np.ndarray, num_terms) -> DataFrame:
     """Stacked E[log β] → (term_id, beta[K]) rows (block starts
-    skipped).  Plain-float rows so the build works with or without
-    Arrow."""
+    skipped), built from one Arrow table."""
     ids = np.setdiff1d(np.arange(elog_beta.shape[0]), term_offsets(num_terms))
-    rows = [(int(v), elog_beta[v].tolist()) for v in ids]
-    return spark.createDataFrame(rows, schema="term_id int, beta array<double>")
+    rows = _rows(ids, elog_beta[ids])
+    return spark.createDataFrame(
+        pa.table([rows["id"].cast(pa.int32()), rows["vec"]], names=["term_id", "beta"])
+    )
 
 
 class _JoinBeta(_Placement):
@@ -705,7 +726,7 @@ class _JoinBeta(_Placement):
     def mstep(self, out: DataFrame):
         sums = self.ckpt_gc.cut(self.combine(out), self.checkpoint, slot="beta", eager=False)
         # Materializes the cut: the one job after the E-step's.
-        _, _, stats = _split_combined(sums.filter(F.col("id") < 0).toPandas(), self.K, self.L)
+        _, _, stats = _split_combined(sums.filter(F.col("id") < 0).toArrow(), self.K, self.L)
         drop_cut(self.sums)  # the previous β: this E-step has read it
         self.sums = sums
         self.beta = sums.filter(F.col("id") >= 0).select(
@@ -724,7 +745,7 @@ class _JoinBeta(_Placement):
         state = self.state
         if self.norm is None:
             return state.elog_beta
-        ids, psi_lam, _ = _split_combined(self.sums.toPandas(), self.K, self.L)
+        ids, psi_lam, _ = _split_combined(self.sums.toArrow(), self.K, self.L)
         return _assemble(state.elog_beta.shape, state.num_terms, self.prior, self.norm, ids, psi_lam)
 
 
@@ -906,11 +927,7 @@ def infer(
     if isinstance(state.elog_beta, DataFrame):
         rows, beta = _join_rows(_tall_form(corpus), state.elog_beta, len(state.alpha)), None
     else:
-        rows = _doc_form(corpus).select(
-            "doc_id", "term_ids", "term_counts",
-            *(["gamma"] if "gamma" in corpus.columns else []),
-        )
-        beta = spark.sparkContext.broadcast(state.elog_beta)
+        rows, beta = _doc_rows(corpus), spark.sparkContext.broadcast(state.elog_beta)
     out = _estep(rows, state.alpha, beta, max_gamma_iter, False,
                  gamma_tol, estep_backend)
     return out.filter(F.col("kind") == "doc").select(
@@ -922,19 +939,17 @@ def infer(
 def beta_dataframe(spark: SparkSession, state: LdaState) -> DataFrame:
     """Materialize E[log β] as the tall BETA table (schemas.BETA), one
     row per (topic, term id) with block starts skipped, through one
-    vectorized pandas frame (a V×K tuple list would crawl)."""
+    Arrow table (a V×K tuple list would crawl)."""
     from mr_lda_spark.schemas import BETA
 
     V1, K = state.elog_beta.shape
     ids = np.setdiff1d(np.arange(V1), term_offsets(state.num_terms)).astype(np.int32)
-    pdf = pd.DataFrame(
-        {
-            "topic": np.tile(np.arange(K, dtype=np.int32), len(ids)),
-            "term_id": np.repeat(ids, K),
-            "log_beta": state.elog_beta[ids].ravel().astype(np.float64),
-        }
+    table = pa.table(
+        [np.tile(np.arange(K, dtype=np.int32), len(ids)), np.repeat(ids, K),
+         state.elog_beta[ids].ravel()],
+        names=["topic", "term_id", "log_beta"],
     )
-    return spark.createDataFrame(pdf, schema=BETA)
+    return spark.createDataFrame(table, schema=BETA)
 
 
 def beta_relation(beta_tall: DataFrame) -> DataFrame:

@@ -6053,7 +6053,7 @@ def _heldout_row(scored, corpus, ll_round=4, ppl_round=4):
 
 @register("lda_train_topics")
 def lda_train_topics(spark, sf_dir):
-    """Native VB-EM training (E-step mapInPandas + an M-step of one
+    """Native VB-EM training (E-step mapInArrow + an M-step of one
     shuffle summing φ per term id + Newton-Raphson alpha), then
     DisplayTopic: top-5 terms per topic.  Iterative + stochastic-init
     → no SQL oracle (rows-only check)."""
@@ -6882,7 +6882,7 @@ def _golden_beta_alpha_frame(spark, state):
 @register("lda_train_golden", _golden_oracle("lda_train_golden"))
 def lda_train_golden(spark, sf_dir):
     """Hash-checked golden run of the flagship VB-EM train
-    (plans/lda.train — E-step mapInPandas + an M-step of one shuffle
+    (plans/lda.train — E-step mapInArrow + an M-step of one shuffle
     summing φ per term id + Newton-Raphson α;
     VariationalInference.java:181-394): the frozen
     sf0.001/K=4/seed configuration's E[log β] audit slice + α vector

@@ -92,7 +92,7 @@ def process_micro_batch(
     )
     # φ sums and the stats row in one Arrow pull.
     ids, sums, (ll, n_docs, n_tokens, _, _) = _split_combined(
-        _combine_phi(out, K, spark.sparkContext.defaultParallelism).toPandas(), K, 1
+        _combine_phi(out, K, spark.sparkContext.defaultParallelism).toArrow(), K, 1
     )
     eb_bc.unpersist()
     if n_docs == 0:
@@ -129,8 +129,6 @@ def train_online_from_stream(
     """Drive the documents table as a rate-limited file stream through
     foreachBatch online updates.  (File source stands in for
     Kafka/Kinesis; one parquet file per trigger.)"""
-    from pyspark.sql import types as T
-
     from mr_lda_spark.session import ensure_package_shipped
 
     ensure_package_shipped(spark)
@@ -141,15 +139,7 @@ def train_online_from_stream(
     dict_b = dictionary.select("term", "term_id").persist()
     dict_b.count()
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
     from mr_lda_spark.streaming import sources
 
     stream = sources.read_stream(

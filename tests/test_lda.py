@@ -5,7 +5,7 @@ the stochastic core is checked by invariants, not value hashes).
 import warnings
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -321,58 +321,149 @@ def test_degenerate_shapes_train_finite_models(spark, beta_mode, num_terms, num_
     assert np.all(state.alpha > 0)
 
 
-def _kernel_batches(elog_beta, carry_beta):
-    """Two pandas batches of a tiny seeded corpus (one doc empty), in
-    the broadcast (gather) or the join (row-carried β slices) layout."""
+def _kernel_docs():
+    """A tiny seeded corpus, (doc_id, term ids, counts); doc 4 is empty."""
     rng = np.random.default_rng(3)
     docs = []
     for d in range(9):
         n = int(rng.integers(1, 6)) if d != 4 else 0
         terms = np.sort(rng.choice(np.arange(1, 13), size=n, replace=False))
         docs.append((d, terms.astype(np.int32), rng.integers(1, 4, size=n)))
+    return docs
+
+
+def _kernel_batches(elog_beta, carry_beta, docs=None, gammas=None):
+    """Two Arrow batches of ``docs`` (default ``_kernel_docs``), in the
+    broadcast (gather) or the join (row-carried β slices) layout;
+    ``gammas`` maps a doc id to its carried γ, null where absent.  A
+    doc whose terms are None has null term_ids and term_counts."""
+    docs = _kernel_docs() if docs is None else docs
+    gammas = gammas or {}
+    lists = lambda xs: [None if x is None else np.asarray(x).tolist() for x in xs]
     batches = []
     for chunk in (docs[:5], docs[5:]):
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [d for d, _, _ in chunk],
-                "term_ids": [t for _, t, _ in chunk],
-                "term_counts": [c for _, _, c in chunk],
-                "gamma": [None] * len(chunk),
-            }
-        )
+        cols = {
+            "doc_id": pa.array([d for d, _, _ in chunk], pa.int64()),
+            "term_ids": pa.array(lists(t for _, t, _ in chunk), pa.list_(pa.int32())),
+            "term_counts": pa.array(lists(c for _, _, c in chunk), pa.list_(pa.int64())),
+            "gamma": pa.array(lists(gammas.get(d) for d, _, _ in chunk),
+                              pa.list_(pa.float64())),
+        }
         if carry_beta:
-            pdf["betas"] = [list(elog_beta[t]) for _, t, _ in chunk]
-        batches.append(pdf)
+            cols["betas"] = pa.array(
+                [None if t is None else elog_beta[t].tolist() for _, t, _ in chunk],
+                pa.list_(pa.list_(pa.float64())),
+            )
+        batches.append(pa.RecordBatch.from_pydict(cols))
     return batches
+
+
+def _kernel_rows(frames):
+    """Kernel output batches → (doc rows {id: (γ, ll)}, Σ c·φ per term
+    summed over partials, the stats vec)."""
+    out = pa.Table.from_batches(frames).to_pydict()
+    rows = list(zip(out["kind"], out["id"], out["vec"], out["ll"]))
+    docs = {i: (np.array(v), ll) for k, i, v, ll in rows if k == "doc"}
+    phi = {}
+    for k, i, v, _ in rows:
+        if k == "phi":
+            phi[i] = phi.get(i, 0.0) + np.array(v)
+    (stats,) = [np.array(v) for k, _, v, _ in rows if k == "stats"]
+    return docs, phi, stats
+
+
+def _unpadded_reference(docs, gammas, elog_beta, alpha, sweeps):
+    """``_kernel_rows`` computed one document at a time on unpadded
+    (1, n, K) arrays: γ⁰ is the carried γ when it has K entries, else
+    α + N/K; documents without terms are skipped."""
+    from mr_lda_spark.functions.special import digamma, gammaln
+
+    k = len(alpha)
+    l_alpha = gammaln(alpha.sum()) - gammaln(alpha).sum()
+    rows, phi, stats = {}, {}, np.zeros(3 + 2 * k)
+    for d, terms, counts in docs:
+        if terms is None or len(terms) == 0:
+            continue
+        c, elb = np.asarray(counts, dtype=np.float64)[None], elog_beta[terms][None]
+        g0 = gammas.get(d)
+        g0 = np.array([g0]) if g0 is not None and len(g0) == k else alpha + c.sum() / k
+        g, lpn, p = lda.numpy_sweep_backend(elb, c, np.tile(g0, (1, 1)), alpha, sweeps, 0.0)
+        ll = l_alpha + gammaln(g).sum() - gammaln(g.sum()) + (c[..., None] * p * (elb - lpn)).sum()
+        rows[d] = (g[0], ll)
+        cphi = c[0][:, None] * p[0]
+        for t, v in zip(terms.tolist(), cphi):
+            phi[t] = phi.get(t, 0.0) + v
+        stats += np.concatenate([[ll, 1, c.sum()], digamma(g[0]) - digamma(g.sum()),
+                                 cphi.sum(axis=0)])
+    return rows, phi, stats
+
+
+_WARM = {1: [0.5, 1.5, 2.5, 3.5], 5: [2.0, 1.0, 1.0, 0.5], 7: [1.0, 1.0, 3.0, 1.0]}
+
+
+def _kernel_input(variant, elog_beta, carry):
+    """(batches, docs, γs) for one decode case of the kernel test."""
+    docs, gammas = _kernel_docs(), dict(_WARM)
+    if variant == "null_terms":
+        docs.insert(2, (20, None, None))  # dropped as P7
+    elif variant == "null_gamma":
+        gammas[5] = None
+    elif variant == "wrong_width_gamma":
+        # Uneven, so a misread γ⁰ would not sweep like the (even) cold start.
+        gammas[5], gammas[7] = [3.0, 0.5, 1.0], [0.2, 4.0, 1.0, 2.0, 0.7]
+    if variant == "sliced":
+        # A first row sliced off: the batch's list offsets start past 0.
+        first, rest = _kernel_batches(
+            elog_beta, carry, [(30, np.array([2, 3]), [1, 1])] + docs, gammas
+        )
+        assert first.slice(1)["term_ids"].offsets[0].as_py() == 2
+        return [first.slice(1), rest], docs, gammas
+    return _kernel_batches(elog_beta, carry, docs, gammas), docs, gammas
 
 
 def test_kernel_gather_equals_row_carried_beta():
     """The one E-step kernel, called without Spark: a broadcast-gather
     input and a row-carried-β input give identical γ, per-doc ll and
     α/ELBO stats rows, and the same φ partials from the one
-    accumulator both placements share."""
+    accumulator both placements share.  Both equal the per-document
+    unpadded reference, whatever the Arrow input looks like: a sliced
+    batch, a null term list (dropped as P7), and a null or wrong-width
+    carried γ (a cold start, as with no γ at all)."""
+    for variant in ("plain", "sliced", "null_terms", "null_gamma", "wrong_width_gamma"):
+        _check_kernel_input(variant)
+
+
+def _check_kernel_input(variant):
     elog_beta = lda.init_elog_beta(12, K, seed=1)
     alpha = np.full(K, 0.3)
+    sweeps = 2  # few enough that γ⁰ still shows in γ
     outs = []
     for carry in (False, True):
         run = lda._estep_kernel(
-            alpha, 10, learning=True, elog_beta=None if carry else elog_beta
+            alpha, sweeps, learning=True, elog_beta=None if carry else elog_beta
         )
-        frames = run(_kernel_batches(elog_beta, carry))
-        outs.append(pd.DataFrame([r for f in frames for r in f.itertuples(index=False)]))
-    gather, carried = outs
-    for kind in ("doc", "stats"):
-        a, b = gather[gather.kind == kind], carried[carried.kind == kind]
-        assert list(a["id"]) == list(b["id"])
-        np.testing.assert_array_equal(np.stack(a["vec"]), np.stack(b["vec"]))
-        np.testing.assert_array_equal(a["ll"].astype(float), b["ll"].astype(float))
-    docs = gather[gather.kind == "doc"]
-    assert 4 not in set(docs["id"]) and len(docs) == 8  # P7: empty doc dropped
-    phi_a = {i: v for i, v in zip(*gather[gather.kind == "phi"][["id", "vec"]].T.values)}
-    phi_b = {i: v for i, v in zip(*carried[carried.kind == "phi"][["id", "vec"]].T.values)}
+        batches, docs, gammas = _kernel_input(variant, elog_beta, carry)
+        outs.append(_kernel_rows(list(run(batches))))
+    (gather, phi_a, stats_a), (carried, phi_b, stats_b) = outs
+    assert list(gather) == list(carried)
+    for d in gather:
+        np.testing.assert_array_equal(gather[d][0], carried[d][0])
+        assert gather[d][1] == carried[d][1]
+    np.testing.assert_array_equal(stats_a, stats_b)
+    assert 4 not in gather and len(gather) == 8  # P7: empty doc dropped
     assert phi_a.keys() == phi_b.keys()
     for t in phi_a:
         np.testing.assert_allclose(phi_a[t], phi_b[t], rtol=1e-13)
+
+    want_docs, want_phi, want_stats = _unpadded_reference(docs, gammas, elog_beta, alpha, sweeps)
+    assert sorted(gather) == sorted(want_docs)
+    for d, (g, ll) in want_docs.items():
+        np.testing.assert_allclose(gather[d][0], g, rtol=1e-12)
+        np.testing.assert_allclose(gather[d][1], ll, rtol=1e-12)
+    assert phi_a.keys() == want_phi.keys()
+    for t in want_phi:
+        np.testing.assert_allclose(phi_a[t], want_phi[t], rtol=1e-12)
+    np.testing.assert_allclose(stats_a, want_stats, rtol=1e-12)
 
 
 @pytest.mark.parametrize("informed", [False, True])
@@ -405,18 +496,19 @@ def test_linear_phi_sums_match_log_space_fold(monkeypatch, informed):
     run = lda._estep_kernel(
         np.full(K, 0.3), 20, True, sweep_backend=recording_sweep, elog_beta=elog_beta
     )
-    frames = list(run(batches))
-    partials = pd.concat([f for f in frames if f["kind"].iloc[0] == "phi"])
-    stats_row = pd.concat([f for f in frames if f["kind"].iloc[0] == "stats"])
-    assert len(partials) > partials["id"].nunique()  # flushed mid-partition
+    out = pa.Table.from_batches(list(run(batches)))
+    partials = out.filter(np.array(out["kind"].to_pylist()) == "phi")
+    stats_row = out.filter(np.array(out["kind"].to_pylist()) == "stats")
+    ids = partials["id"].to_numpy()
+    assert len(ids) > np.unique(ids).size  # flushed mid-partition
     phi = np.zeros(elog_beta.shape)
-    np.add.at(phi, partials["id"].to_numpy(), np.stack(partials["vec"]))
+    np.add.at(phi, ids, np.array(partials["vec"].to_pylist()))
 
     log_phi = np.full(elog_beta.shape, -np.inf)
-    for pdf, (counts_pad, lpn) in zip(batches, recorded):
+    for batch, (counts_pad, lpn) in zip(batches, recorded):
         terms_pad = np.zeros(counts_pad.shape, dtype=np.int64)
-        for j, t in enumerate(t for t in pdf["term_ids"] if t.size):
-            terms_pad[j, : t.size] = t
+        for j, t in enumerate(t for t in batch["term_ids"].to_pylist() if t):
+            terms_pad[j, : len(t)] = t
         valid = counts_pad > 0
         contrib = lpn[valid] + np.log(counts_pad[valid])[:, None]
         np.logaddexp.at(log_phi, terms_pad[valid], contrib)

@@ -117,8 +117,9 @@ def test_resume_from_incomplete_snapshot_is_a_named_error(
     spark, corpus, tmp_path, monkeypatch
 ):
     """``train --model-index`` refuses a γ snapshot with no ``_SUCCESS``
-    marker, or one missing documents of the corpus, before any EM
-    job; a whole snapshot reaches the trainer as the corpus γ."""
+    marker, one missing documents of the corpus, or one whose γ has
+    another width than ``--topic``, before any EM job; a whole snapshot
+    reaches the trainer as the corpus γ."""
     monkeypatch.setenv(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", spark.conf.get("spark.sql.shuffle.partitions")
     )
@@ -126,6 +127,9 @@ def test_resume_from_incomplete_snapshot_is_a_named_error(
     gamma = corpus.selectExpr("doc_id", "array(1.0D, 2.0D, 3.0D) AS gamma")
     gamma.write.parquet(str(tmp_path / "whole"))
     gamma.filter("doc_id < 30").write.parquet(str(tmp_path / "partial"))
+    corpus.selectExpr("doc_id", "array(1.0D, 2.0D) AS gamma").write.parquet(
+        str(tmp_path / "narrow")
+    )
     gamma.write.parquet(str(tmp_path / "unfinished"))
     (tmp_path / "unfinished" / "_SUCCESS").unlink()
 
@@ -149,6 +153,8 @@ def test_resume_from_incomplete_snapshot_is_a_named_error(
         train("unfinished")
     with pytest.raises(cli.TruncatedSnapshotError, match="10 documents"):
         train("partial")
+    with pytest.raises(cli.TruncatedSnapshotError, match="40 documents .*width 2.*--topic is 3"):
+        train("narrow")
     assert seen == []
     with pytest.raises(RuntimeError, match="EM reached"):
         train("whole")

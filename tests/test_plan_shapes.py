@@ -305,7 +305,8 @@ def test_registry_sweep_no_cartesian_no_pickled_udf(spark):
     # static multiplicity is an UPPER BOUND on runtime recompute —
     # post-exchange branches (WindowGroupLimit) may share one shuffle
     # at execution via runtime exchange reuse, while pre-exchange map
-    # kernels (MapInPandas/ArrowEval) replicate for real.  The guard
+    # kernels (MapInPandas/MapInArrow/ArrowEval) replicate for real;
+    # MapInPandas and MapInArrow count together.  The guard
     # deliberately gates on the static upper bound: it is the review
     # invariant that survives reuse-disabled engines and AQE config
     # drift (verify a flagged plan's runtime cost with
@@ -335,14 +336,15 @@ def test_registry_sweep_no_cartesian_no_pickled_udf(spark):
             offenders.append((name, "BatchEvalPython"))
         if "CartesianProduct" in plan and name not in allow_cartesian:
             offenders.append((name, "CartesianProduct"))
+        map_kernels = plan.count("MapInPandas") + plan.count("MapInArrow")
         if name not in multiplicity_allow and (
-            plan.count("MapInPandas") >= 3
+            map_kernels >= 3
             or plan.count("ArrowEvalPython") >= 4
             or plan.count("WindowGroupLimit") >= 6
         ):
             offenders.append(
                 (name, "kernel-multiplicity",
-                 plan.count("MapInPandas"),
+                 map_kernels,
                  plan.count("ArrowEvalPython"),
                  plan.count("WindowGroupLimit"))
             )

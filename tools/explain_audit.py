@@ -12,8 +12,9 @@ lesson, SCALING_r13_materialize.json): static plan-node multiplicity
 is an UPPER BOUND on runtime recompute — post-exchange branches that
 print N times in the static plan may share one shuffle at execution
 (ReusedExchange in the ``isFinalPlan=true`` plan), while pre-exchange
-map kernels (MapInPandas) replicate for real.  The static dump stays
-the review gate; the runtime counts say which multiplicities cost.
+map kernels (MapInPandas, MapInArrow) replicate for real.  The static
+dump stays the review gate; the runtime counts say which
+multiplicities cost.
 """
 from __future__ import annotations
 
@@ -172,7 +173,8 @@ def main() -> None:
             lines += [
                 "Runtime (final adaptive plan): "
                 f"ReusedExchange={fin.count('ReusedExchange')} "
-                f"MapInPandas={fin.count('MapInPandas')} "
+                f"MapInPandas+MapInArrow="
+                f"{fin.count('MapInPandas') + fin.count('MapInArrow')} "
                 f"WindowGroupLimit={fin.count('WindowGroupLimit')} "
                 f"final={final}",
                 "",

@@ -8,16 +8,16 @@ registered query, not just the three probed ones.
 For each registry row the audit records:
 
 - ``static``: node counts from the UNEXECUTED physical plan
-  (MapInPandas / WindowGroupLimit / Exchange) — the review-gate upper
-  bound,
+  (MapInPandas / MapInArrow / WindowGroupLimit / Exchange) — the
+  review-gate upper bound,
 - ``runtime``: node counts from the FINAL adaptive plan after
-  execution (ReusedExchange / MapInPandas / WindowGroupLimit,
-  ``final`` = the plan actually finalized) — what the multiplicity
-  COST,
+  execution (ReusedExchange / MapInPandas / MapInArrow /
+  WindowGroupLimit, ``final`` = the plan actually finalized) — what
+  the multiplicity COST,
 - ``flag``: rows whose final plan still carries ≥ 2 Arrow kernels
-  (``MapInPandas >= 2``) — the pre-exchange-replication candidates
-  that need a named explanation (distinct kernels vs true recompute)
-  in the round's PERF_NOTES.
+  (``MapInPandas + MapInArrow >= 2``) — the pre-exchange-replication
+  candidates that need a named explanation (distinct kernels vs true
+  recompute) in the round's PERF_NOTES.
 
 Execution is JVM-side only (``executedPlan().execute().count()`` on
 the SAME QueryExecution whose plans are printed): no rows cross to the
@@ -47,15 +47,16 @@ PROTOCOL = (
     "plan node counts recorded, then executed JVM-side on its own "
     "QueryExecution (executedPlan().execute().count() - no driver "
     "materialization) and the final adaptive plan's node counts "
-    "recorded.  flag = final plan carries >=2 MapInPandas nodes "
+    "recorded.  flag = final plan carries >=2 MapInPandas + "
+    "MapInArrow nodes "
     "(pre-exchange Arrow-kernel replication candidates - runtime "
     "exchange reuse cannot deduplicate pre-exchange map work, so "
     "each flagged row needs a named explanation: distinct kernels "
     "vs true recompute)."
 )
 
-NODES_STATIC = ("MapInPandas", "WindowGroupLimit", "Exchange")
-NODES_RUNTIME = ("ReusedExchange", "MapInPandas", "WindowGroupLimit")
+NODES_STATIC = ("MapInPandas", "MapInArrow", "WindowGroupLimit", "Exchange")
+NODES_RUNTIME = ("ReusedExchange", "MapInPandas", "MapInArrow", "WindowGroupLimit")
 
 
 def main() -> int:
@@ -111,7 +112,7 @@ def main() -> int:
             fin = fin.split("== Initial Plan ==")[0]
             row["runtime"] = {n: fin.count(n) for n in NODES_RUNTIME}
             row["runtime"]["final"] = is_final
-            row["flag"] = row["runtime"]["MapInPandas"] >= 2
+            row["flag"] = row["runtime"]["MapInPandas"] + row["runtime"]["MapInArrow"] >= 2
             row["ok"] = True
         except Exception as exc:  # noqa: BLE001 - audit records, never dies
             row["ok"] = False
