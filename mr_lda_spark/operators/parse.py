@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -135,13 +134,17 @@ def _analyzer_token_col(analyzer, col, batched: bool):
         except Exception:
             pass
 
+    import pandas as pd  # only this path needs pandas
+
     if batched:
-        def fn(s: pd.Series) -> pd.Series:
+        def fn(s):
             return analyzer(s)
     else:
-        def fn(s: pd.Series) -> pd.Series:
+        def fn(s):
             return s.map(lambda t: analyzer(t) if t is not None else [])
-
+    # pandas_udf reads its kind from these hints; string hints (postponed
+    # annotations) would resolve against the module, which has no ``pd``.
+    fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return F.pandas_udf(fn, "array<string>")(col)
 
 
@@ -392,20 +395,3 @@ def corpus_to_doc_form(corpus_tall: DataFrame) -> DataFrame:
         )
     )
 
-
-def parse_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    stopwords: Sequence[str] | None = None,
-    min_df_frac: float = 0.0,
-    max_df_frac: float = 1.0,
-) -> tuple[DataFrame, DataFrame]:
-    """The whole ParseCorpus program (4 reference jobs → one plan with
-    two materialization points).  Returns (dictionary, corpus_tall)."""
-    tokens = tokenize(docs, text_col, doc_id_col, stopwords)
-    num_docs = docs.select(doc_id_col).distinct().count()
-    stats = term_stats(tokens)
-    dictionary = build_dictionary(stats, num_docs, min_df_frac, max_df_frac)
-    corpus = encode_corpus(tokens, dictionary)
-    return dictionary, corpus

@@ -13,12 +13,14 @@ per iteration, for every mode:
 
 - E-step: ``mapInArrow`` over the corpus cut's own partitions.  The
   kernel pads each Arrow batch to ``(B, n_max, K)`` with one scatter
-  from the list offsets, runs the sweeps, and emits γ/ll doc rows,
-  per-partition φ partials and one stats row (the reference's
-  counters, A6/A7) as Arrow record batches.  Its output is cut
-  lazily: the M-step's job runs it, and the next iteration reads γ
-  from the cut.  The φ combine and the driver's pulls (``toArrow``)
-  exchange Arrow too.
+  from the list offsets, runs the sweeps, and emits doc rows (γ, ll
+  and the document's bag), per-partition φ partials and one stats row
+  (the reference's counters, A6/A7) as Arrow record batches.  Its
+  output is cut lazily: the M-step's job runs it, and the next
+  iteration reads γ from the cut — the broadcast placement maps its
+  doc rows as they are, the reference's Document written back with
+  its γ (DocumentMapper.java:341-346).  The φ combine and the
+  driver's pulls (``toArrow``) exchange Arrow too.
 - M-step: one shuffle sums the φ partials per term id, the stats row
   riding along, and each reducer maps λ = η + Σ c·φ to ψ(λ); the
   normalizer ψ(Σ_v λ) is the stats row's Σ c·φ per (language, topic)
@@ -40,7 +42,7 @@ polylda/DocumentMapper.java:31-32).  Mono is L=1 with offset 0.
 
 - ``"broadcast"``: E[log β] is a driver matrix broadcast each iteration
   (the reference's DistributedCache β, J3); the kernel gathers it per
-  token.  Jobs per iteration: γ broadcast, E-step, φ pull (3).
+  token.  Jobs per iteration: E-step, φ pull (2).
 - ``"join"``: β is a (term_id, ψ(λ)) relation that never touches the
   driver inside the loop — the scale path once V×K outgrows executor
   memory (SURVEY.md §7.3).  The corpus joins β on term_id and regroups
@@ -59,6 +61,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from mr_lda_spark.functions.alpha import update_alpha_scalar, update_alpha_vector
 from mr_lda_spark.functions.special import digamma, gammaln
@@ -74,13 +77,16 @@ DEFAULT_LOG_ETA = math.log(DEFAULT_ETA)
 # Informed prior (InformedPrior.java:43-44): seeds at 1000, the rest 0.001.
 _ETA_SEED, _ETA_OTHER = float(np.exp(LOG_ETA_SEED)), float(np.exp(LOG_ETA_OTHER))
 
-# E-step output: 'doc' rows (id = doc_id, vec = γ, ll = doc ELBO),
-# 'phi' rows (id = term id, vec = the partition's Σ c·φ) and one
-# 'stats' row per partition (id = -1, vec = [ELBO, documents, tokens,
-# α sufficient statistic (K), Σ c·φ per (language, topic) (L×K)]).
-_ESTEP_SCHEMA = "kind string, id long, vec array<double>, ll double"
+# E-step output: 'doc' rows (id = doc_id, vec = γ, ll = doc ELBO, and
+# the document's bag, so the row is the next E-step's input), 'phi'
+# rows (id = term id, vec = the partition's Σ c·φ) and one 'stats' row
+# per partition (id = -1, vec = [ELBO, documents, tokens, α sufficient
+# statistic (K), Σ c·φ per (language, topic) (L×K)]); no bag on either.
+_BAG = pa.list_(pa.int32())
 _ESTEP_ARROW = pa.schema([("kind", pa.string()), ("id", pa.int64()),
-                          ("vec", pa.list_(pa.float64())), ("ll", pa.float64())])
+                          ("vec", pa.list_(pa.float64())), ("ll", pa.float64()),
+                          ("term_ids", _BAG), ("term_counts", _BAG)])
+_ESTEP_SCHEMA = from_arrow_schema(_ESTEP_ARROW)
 _STATS_HEAD = 3
 
 # φ accumulator flush bound (terms per partition before a partial is
@@ -364,16 +370,19 @@ def _values(lists) -> np.ndarray:
     return pc.list_flatten(lists).to_numpy()
 
 
-def _rows(ids, vecs: np.ndarray, kind=None, ll=None) -> pa.RecordBatch:
-    """``_ESTEP_ARROW`` rows from (n,) ids and (n, w) vecs (null ll when
-    ``ll`` is None), or only their (id, vec) columns when ``kind`` is."""
+def _rows(ids, vecs: np.ndarray, kind=None, ll=None, bags=None) -> pa.RecordBatch:
+    """``_ESTEP_ARROW`` rows from (n,) ids and (n, w) vecs (null ll and
+    bags when ``ll`` or the doc batch ``bags`` is None), or only their
+    (id, vec) columns when ``kind`` is."""
     n, w = vecs.shape
     cols = [pa.array(ids, pa.int64()), pa.ListArray.from_arrays(
         pa.array(np.arange(0, n * w + 1, w), pa.int32()), pa.array(vecs.ravel()))]
     if kind is None:
         return pa.RecordBatch.from_arrays(cols, names=["id", "vec"])
     ll = pa.nulls(n, pa.float64()) if ll is None else pa.array(ll, pa.float64())
-    return pa.RecordBatch.from_arrays([pa.repeat(kind, n), *cols, ll], schema=_ESTEP_ARROW)
+    bag = [pa.nulls(n, _BAG)] * 2 if bags is None else [
+        bags.column(c).cast(_BAG) for c in ("term_ids", "term_counts")]
+    return pa.RecordBatch.from_arrays([pa.repeat(kind, n), *cols, ll, *bag], schema=_ESTEP_ARROW)
 
 
 def _split(rows, K: int):
@@ -404,7 +413,8 @@ def _estep_kernel(
     torrent copy per executor instead of a per-task closure pickle),
     gathered per token.  ``offsets``: the ``term_offsets`` block starts.
     ``learning=False`` is the reference's -test mode
-    (VariationalInferenceOptions.java:166-178): no φ rows.
+    (VariationalInferenceOptions.java:166-178): no φ rows.  Each doc
+    row keeps its input bag (term_ids, term_counts as int32 lists).
 
     Per document (DocumentMapper.java:184-259 semantics):
       γ⁰ = carried γ of width K, else α + N/K
@@ -470,9 +480,9 @@ def _estep_kernel(
                 digamma(gamma) - digamma(sum_gamma)[:, None]
             ).sum(axis=0)
 
-            # Doc rows carry ONLY gamma + ll — the static term arrays
-            # never round-trip back through Arrow.
-            yield _rows(batch.column("doc_id").to_numpy(), gamma, "doc", doc_ll)
+            # Doc rows carry γ beside the document's own bag, so the
+            # next E-step maps them with no join (DocumentMapper.java:341-346).
+            yield _rows(batch.column("doc_id").to_numpy(), gamma, "doc", doc_ll, batch)
             if learning:
                 valid = counts_pad > 0
                 cphi = counts_pad[valid][:, None] * phi[valid]
@@ -575,6 +585,13 @@ def _assemble(shape, num_terms, prior, norm, ids, psi_lam) -> np.ndarray:
     return mat
 
 
+def _doc_state(cut: DataFrame, bag: bool = False) -> DataFrame:
+    """An E-step cut's doc rows as (doc_id[, term_ids, term_counts], gamma)."""
+    keep = ["term_ids", "term_counts"] if bag else []
+    doc = F.col("kind") == "doc"
+    return cut.filter(doc).select(F.col("id").alias("doc_id"), *keep, F.col("vec").alias("gamma"))
+
+
 def _fits_broadcast(spark: SparkSession, n_rows: int, K: int) -> bool:
     """Whether ``n_rows`` (id, vec[K]) rows fit the broadcast threshold.
     The loop knows the size; a cut's plan estimate multiplies upstream
@@ -610,25 +627,24 @@ class _Placement:
 class _BroadcastBeta(_Placement):
     """β as one driver matrix, broadcast (torrent, one copy per
     executor) to every E-step.  The corpus is cut ONCE as doc rows
-    partitioned by doc_id and never re-materialized; each iteration
-    joins only the last E-step's γ back onto it — broadcast while
-    D×K fits the session threshold, so the corpus side never moves."""
+    partitioned by doc_id.  From iteration 2 each E-step maps the last
+    E-step's doc rows, which carry the bag beside γ, and the corpus cut
+    is freed: no join, and no document moves again at any D."""
 
     def __init__(self, *args, truncate_beta=None):
         super().__init__(*args)
-        self.truncate_beta, self._bc, self.num_docs = truncate_beta, None, 0
+        self.truncate_beta, self._bc = truncate_beta, None
 
     def load(self, corpus: DataFrame) -> None:
         self.base = cut_corpus_lineage(  # the ONE materialization of the input
             _doc_rows(corpus).repartition(self.n_parts, "doc_id"), self.checkpoint
         )
 
-    def estep_rows(self, gamma):
+    def estep_rows(self, prev):
         rows = self.base
-        if gamma is not None:
-            if _fits_broadcast(self.spark, self.num_docs, self.K):
-                gamma = F.broadcast(gamma)
-            rows = rows.drop("gamma").join(gamma, "doc_id", "left")
+        if prev is not None:  # the doc rows carry the corpus from here on
+            drop_cut(self.base)
+            self.base, rows = None, _doc_state(prev, bag=True)
         self._bc = self.spark.sparkContext.broadcast(self.state.elog_beta)
         return rows, self._bc, None
 
@@ -637,7 +653,6 @@ class _BroadcastBeta(_Placement):
         # ~V rows of ψ(λ) plus the stats row: one Arrow pull.
         ids, psi_lam, stats = _split_combined(self.combine(out).toArrow(), self.K, self.L)
         self._bc.unpersist()  # the E-step has run
-        self.num_docs = stats[1]
         norm = digamma(self.eta_mass + stats[4])
         elog = _assemble(state.elog_beta.shape, state.num_terms, self.prior, norm, ids, psi_lam)
         n = self.truncate_beta
@@ -714,13 +729,12 @@ class _JoinBeta(_Placement):
         self.beta = _matrix_relation(self.spark, self.state.elog_beta, self.state.num_terms)
         self.gamma0 = corpus.select("doc_id", "gamma") if "gamma" in corpus.columns else None
 
-    def estep_rows(self, gamma):
+    def estep_rows(self, prev):
         beta = self.beta
         if _fits_broadcast(self.spark, sum(self.state.num_terms), self.K):
             beta = F.broadcast(beta)
-        rows = _join_rows(
-            self.base, beta, self.K, self.gamma0 if gamma is None else gamma, self.n_parts
-        )
+        gamma = self.gamma0 if prev is None else _doc_state(prev)
+        rows = _join_rows(self.base, beta, self.K, gamma, self.n_parts)
         return rows, None, self.norm
 
     def mstep(self, out: DataFrame):
@@ -831,13 +845,13 @@ def train(
     num_docs = 0
     prev_elbo = None
     gamma_df = None
-    live = []  # E-step cuts not yet freed; the last one backs gamma_df
+    live = []  # E-step cuts not yet freed; the last one feeds the next E-step
     try:
         placement.load(corpus)
         for it in range(max_iterations):
             iter_t0 = time.perf_counter()
             ckpt_gc.sweep()  # generation it-2 is unreachable now
-            rows, beta, beta_norm = placement.estep_rows(gamma_df)
+            rows, beta, beta_norm = placement.estep_rows(live[-1] if live else None)
             live.append(ckpt_gc.cut(
                 _estep(rows, state.alpha, beta, max_gamma_iter, True,
                        gamma_tol, estep_backend, offsets, beta_norm),
@@ -853,9 +867,6 @@ def train(
                 num_docs, state.total_tokens = docs, tokens
                 if tokens <= 0:
                     raise EmptyCorpusError("corpus has no tokens: every document is empty")
-            gamma_df = live[-1].filter(F.col("kind") == "doc").select(
-                F.col("id").alias("doc_id"), F.col("vec").alias("gamma")
-            )
 
             if symmetric_alpha:
                 # Keep α symmetric: the scalar update on the summed
@@ -872,13 +883,13 @@ def train(
                 # reference's LOG_LIKELIHOOD counter, normalized.
                 state.perplexity_history.append(math.exp(-elbo / state.total_tokens))
             if snapshot_dir is not None:
-                _write_snapshot(snapshot_dir, it + 1, gamma_df, state)
+                _write_snapshot(snapshot_dir, it + 1, _doc_state(live[-1]), state)
             if prev_elbo is not None and abs((elbo - prev_elbo) / prev_elbo) <= converge:
                 break
             prev_elbo = elbo
 
         if live:  # D×K doubles, cut apart from the E-step's φ rows
-            gamma_df = ckpt_gc.cut(gamma_df, corpus_checkpoint, slot="gamma")
+            gamma_df = ckpt_gc.cut(_doc_state(live[-1]), corpus_checkpoint, slot="gamma")
             ckpt_gc.retire("estep")
         ckpt_gc.sweep()  # superseded generations and the last E-step
         state.elog_beta = placement.finish()

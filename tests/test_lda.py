@@ -332,7 +332,7 @@ def _kernel_docs():
     return docs
 
 
-def _kernel_batches(elog_beta, carry_beta, docs=None, gammas=None):
+def _kernel_batches(elog_beta, carry_beta, docs=None, gammas=None, term_type=pa.int32()):
     """Two Arrow batches of ``docs`` (default ``_kernel_docs``), in the
     broadcast (gather) or the join (row-carried β slices) layout;
     ``gammas`` maps a doc id to its carried γ, null where absent.  A
@@ -344,7 +344,7 @@ def _kernel_batches(elog_beta, carry_beta, docs=None, gammas=None):
     for chunk in (docs[:5], docs[5:]):
         cols = {
             "doc_id": pa.array([d for d, _, _ in chunk], pa.int64()),
-            "term_ids": pa.array(lists(t for _, t, _ in chunk), pa.list_(pa.int32())),
+            "term_ids": pa.array(lists(t for _, t, _ in chunk), pa.list_(term_type)),
             "term_counts": pa.array(lists(c for _, _, c in chunk), pa.list_(pa.int64())),
             "gamma": pa.array(lists(gammas.get(d) for d, _, _ in chunk),
                               pa.list_(pa.float64())),
@@ -418,7 +418,25 @@ def _kernel_input(variant, elog_beta, carry):
         )
         assert first.slice(1)["term_ids"].offsets[0].as_py() == 2
         return [first.slice(1), rest], docs, gammas
-    return _kernel_batches(elog_beta, carry, docs, gammas), docs, gammas
+    # A caller's or the stream trainer's corpus may hold array<bigint> terms.
+    term_type = pa.int64() if variant == "int64_terms" else pa.int32()
+    return _kernel_batches(elog_beta, carry, docs, gammas, term_type), docs, gammas
+
+
+def _check_doc_bags(frames, docs):
+    """Doc rows carry the kept input rows' bags as int32 lists, so they
+    can be the next E-step's input; φ and stats rows carry none."""
+    out = pa.Table.from_batches(frames)
+    assert out.schema == lda._ESTEP_ARROW
+    assert out.schema.field("term_ids").type == pa.list_(pa.int32())
+    rows = out.to_pydict()
+    bags = {i: (t, c) for k, i, t, c in zip(rows["kind"], rows["id"], rows["term_ids"],
+                                            rows["term_counts"]) if k == "doc"}
+    want = {d: (np.asarray(t).tolist(), np.asarray(c).tolist())
+            for d, t, c in docs if t is not None and len(t)}
+    assert bags == want
+    assert all(t is None and c is None for k, t, c in zip(
+        rows["kind"], rows["term_ids"], rows["term_counts"]) if k != "doc")
 
 
 def test_kernel_gather_equals_row_carried_beta():
@@ -427,9 +445,11 @@ def test_kernel_gather_equals_row_carried_beta():
     α/ELBO stats rows, and the same φ partials from the one
     accumulator both placements share.  Both equal the per-document
     unpadded reference, whatever the Arrow input looks like: a sliced
-    batch, a null term list (dropped as P7), and a null or wrong-width
-    carried γ (a cold start, as with no γ at all)."""
-    for variant in ("plain", "sliced", "null_terms", "null_gamma", "wrong_width_gamma"):
+    batch, a null term list (dropped as P7), int64 term ids, and a null
+    or wrong-width carried γ (a cold start, as with no γ at all).  Every
+    doc row keeps its input bag."""
+    for variant in ("plain", "sliced", "null_terms", "int64_terms", "null_gamma",
+                    "wrong_width_gamma"):
         _check_kernel_input(variant)
 
 
@@ -443,7 +463,9 @@ def _check_kernel_input(variant):
             alpha, sweeps, learning=True, elog_beta=None if carry else elog_beta
         )
         batches, docs, gammas = _kernel_input(variant, elog_beta, carry)
-        outs.append(_kernel_rows(list(run(batches))))
+        frames = list(run(batches))
+        _check_doc_bags(frames, docs)
+        outs.append(_kernel_rows(frames))
     (gather, phi_a, stats_a), (carried, phi_b, stats_b) = outs
     assert list(gather) == list(carried)
     for d in gather:

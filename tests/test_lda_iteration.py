@@ -6,19 +6,20 @@ The trainer runs on ``N_PARTS`` partitions, fewer than the session's
 shuffle partitions: that is the geometry in which a re-shuffled or
 un-coalesced E-step shows."""
 
+import contextlib
 import re
 
 import numpy as np
 import pytest
 
-from mr_lda_spark import cli
+from mr_lda_spark import cli, session
 from mr_lda_spark.plans import lda
 
 N_PARTS = 3
 V, K = 30, 3
-# Steady jobs per EM iteration: γ broadcast, E-step, φ pull (broadcast
-# β); β broadcast, doc regroup, E-step, stats pull (join β).
-STEADY_JOBS = {"broadcast": 3, "join": 4}
+# Steady jobs per EM iteration: E-step, φ pull (broadcast β); β
+# broadcast, doc regroup, E-step, stats pull (join β).
+STEADY_JOBS = {"broadcast": 2, "join": 4}
 
 
 @pytest.fixture(scope="module")
@@ -44,12 +45,20 @@ def _persistent_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-@pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
-def test_steady_iteration_jobs_and_estep_plan(spark, corpus, monkeypatch, beta_mode):
+@pytest.mark.parametrize("beta_mode, past_threshold", [
+    pytest.param("broadcast", False, id="broadcast"),
+    pytest.param("join", False, id="join"),
+    pytest.param("broadcast", True, id="broadcast-past-threshold"),
+])
+def test_steady_iteration_jobs_and_estep_plan(
+    spark, corpus, monkeypatch, beta_mode, past_threshold
+):
     """Steady jobs per iteration (3 iterations − 2, from the status
     tracker) stay pinned; the last E-step runs as ``N_PARTS`` tasks,
     and its executed plan shuffles nothing but the join placement's
-    one doc regroup — never the corpus cut."""
+    one doc regroup — never the corpus cut.  The broadcast placement's
+    E-step maps the previous E-step's doc rows: no exchange and no join
+    at any size, also with auto-broadcast off (a γ past the threshold)."""
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) != N_PARTS
     esteps = []
 
@@ -61,24 +70,51 @@ def test_steady_iteration_jobs_and_estep_plan(spark, corpus, monkeypatch, beta_m
     monkeypatch.setattr(lda, "_estep", spy)
     sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
     jobs = {}
+    threshold = session.no_auto_broadcast(spark) if past_threshold else contextlib.nullcontext()
     try:
-        for iterations in (2, 3):
-            group = f"lda-iteration-{beta_mode}-{iterations}"
-            sc.setJobGroup(group, group)
-            _, state = _train(spark, corpus, beta_mode, iterations)
-            assert len(state.history) == iterations
-            jobs[iterations] = len(tracker.getJobIdsForGroup(group))
+        with threshold:
+            for iterations in (2, 3):
+                group = f"lda-iteration-{beta_mode}-{past_threshold}-{iterations}"
+                sc.setJobGroup(group, group)
+                _, state = _train(spark, corpus, beta_mode, iterations)
+                assert len(state.history) == iterations
+                jobs[iterations] = len(tracker.getJobIdsForGroup(group))
+            executed = esteps[-1]._jdf.queryExecution().executedPlan()
+            assert executed.execute().getNumPartitions() == N_PARTS
     finally:
         sc.setJobGroup(None, None)
     assert jobs[3] - jobs[2] == STEADY_JOBS[beta_mode]
 
-    executed = esteps[-1]._jdf.queryExecution().executedPlan()
-    assert executed.execute().getNumPartitions() == N_PARTS
     final = executed.toString().split("== Initial Plan ==")[0]
+    if beta_mode == "broadcast":
+        # No exchange, so AQE does not wrap the plan at all.
+        assert "Exchange" not in final and "Join" not in final, final
+        return
     assert "isFinalPlan=true" in final
     exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+L?, (\d+)\)", final)
-    want = [("doc_id", str(N_PARTS))] if beta_mode == "join" else []
-    assert exchanges == want, final
+    assert exchanges == [("doc_id", str(N_PARTS))], final
+
+
+def test_broadcast_corpus_cut_freed_before_second_estep(spark, corpus, monkeypatch):
+    """From iteration 2 the broadcast placement's E-step reads only the
+    previous E-step's doc rows, so the corpus cut is unpersisted before
+    iteration 2's E-step (run by its M-step's job) starts."""
+    cuts, persisted = [], []
+    real_cut, real_mstep = lda.cut_corpus_lineage, lda._BroadcastBeta.mstep
+
+    def cut(*args, **kwargs):
+        cuts.append(real_cut(*args, **kwargs))
+        return cuts[-1]
+
+    def mstep(self, out):
+        base = cuts[0]._jdf.queryExecution().analyzed().rdd().id()
+        persisted.append(base in _persistent_rdds(spark))
+        return real_mstep(self, out)
+
+    monkeypatch.setattr(lda, "cut_corpus_lineage", cut)
+    monkeypatch.setattr(lda._BroadcastBeta, "mstep", mstep)
+    _train(spark, corpus, "broadcast", 3)
+    assert persisted == [True, False, False]
 
 
 @pytest.mark.parametrize("beta_mode", ["broadcast", "join"])
